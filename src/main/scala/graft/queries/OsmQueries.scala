@@ -30,13 +30,15 @@ object OsmQueries {
   /** The reference's own test fixture (FIXTURES.md §1). */
   val fixturePath = "/root/reference/src/test/java/resources/temp.dat"
 
+  /** The reference's bundled osmpbf jar (FIXTURES.md §3). */
+  val upstreamJarPath = "/root/reference/lib/osmpbf-1.3.3.jar"
+
   /** The upstream sample.pbf bundled in the reference's osmpbf jar
     * (FIXTURES.md §3) — unlike temp.dat it carries a real OSMHeader
     * block, so it backs the header-surface query.
     */
   lazy val samplePbfPath: String = {
-    val jar = new java.util.jar.JarFile(
-      new java.io.File("/root/reference/lib/osmpbf-1.3.3.jar"))
+    val jar = new java.util.jar.JarFile(new java.io.File(upstreamJarPath))
     val entry = jar.getEntry("sample.pbf")
     val out = java.nio.file.Files.createTempFile("sample", ".pbf")
     val in = jar.getInputStream(entry)

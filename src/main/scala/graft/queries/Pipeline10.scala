@@ -746,9 +746,12 @@ object Pipeline10 {
         }
         val picked = scala.collection.mutable.ArrayBuffer(
           (1L, 0L, java.math.BigDecimal.ZERO))
+        val sc = s.sparkContext
+        val before0 = sc.getPersistentRDDs.keySet
         var mind = distTo(0L)
           .select($"vec_id", $"d2".as("mind"))
           .localCheckpoint(true)
+        var liveIds = sc.getPersistentRDDs.keySet.diff(before0).toSet
         // The loop stops early when the candidate set exhausts (fewer
         // than 8 vectors in the corpus — a tiny SF or filtered
         // fixture): an empty argmax means every vector is already a
@@ -765,18 +768,21 @@ object Pipeline10 {
             val cid = top.getLong(0)
             picked += ((t.toLong, cid, top.getDecimal(1)))
             if (t < 8) {
-              val prev = mind
-              mind = prev.filter($"vec_id" =!= cid)
+              val before = sc.getPersistentRDDs.keySet
+              mind = mind.filter($"vec_id" =!= cid)
                 .join(distTo(cid), "vec_id")
                 .select($"vec_id",
                   least($"mind", $"d2").as("mind"))
                 .localCheckpoint(true)
-              prev.unpersist() // lineage-truncation WARN is benign:
-              // the frame is never re-read after replacement
+              val added = sc.getPersistentRDDs.keySet.diff(before).toSet
+              // raw-RDD release: Dataset.unpersist() is a no-op on a
+              // checkpointed LogicalRDD (the CacheManager never saw it)
+              graft.operators.Dedup.releasePersisted(s, liveIds)
+              liveIds = added
             }
           }
         }
-        mind.unpersist()
+        graft.operators.Dedup.releasePersisted(s, liveIds)
         cells.unpersist()
         // radius as floor(d² · 10^6) — an EXACT integer of the exact
         // decimal, because the round-6 double form hit a half-way tie

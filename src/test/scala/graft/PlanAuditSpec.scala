@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.FixtureGuard.assumeFile
 
 /** Physical-plan audits: at 100 TB these properties are the difference
   * between a working query and a working cluster. Asserted here so a
@@ -149,6 +150,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("osmpbf scan reports pruned columns and pushed kind") {
+    assumeFile(graft.queries.OsmQueries.fixturePath)
     import org.apache.spark.sql.functions.col
     val df = spark.read.format("osmpbf")
       .load("/root/reference/src/test/java/resources/temp.dat")
@@ -267,6 +269,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("osm11 relation assembly joins are equi-joins, never nested loops") {
+    assumeFile(graft.queries.OsmQueries.fixturePath)
     val p = plan("osm11_relation_geometry")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),

@@ -1,6 +1,7 @@
 package graft.pbf
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.FixtureGuard.assumeFile
 
 /** Golden decode tests against the reference's real-world fixture
   * (FIXTURES.md §1; golden values from OsmPbfRecordReaderTest.java:23-25,
@@ -13,6 +14,7 @@ class PbfDecodeSpec extends AnyFunSuite {
   private val allKinds: Set[EntityKind.Value] = EntityKind.values.unsorted.toSet
 
   test("block framing: blocks at 132 and 48116") {
+    assumeFile(fixture)
     val in = new FileRangeReader(fixture)
     try {
       val blocks = PbfScanner.blocksInRange(in, 0, in.size).toList
@@ -23,6 +25,7 @@ class PbfDecodeSpec extends AnyFunSuite {
   }
 
   test("golden: first node id/lat/lon") {
+    assumeFile(fixture)
     val first = PbfScanner.scanFile(fixture, Set(EntityKind.Node))
       .collectFirst { case n: OsmNode => n }.get
     assert(first.id == 108424353L)
@@ -31,6 +34,7 @@ class PbfDecodeSpec extends AnyFunSuite {
   }
 
   test("golden: entity counts 9720 / 1348 / 5") {
+    assumeFile(fixture)
     val all = PbfScanner.scanFile(fixture).toList
     assert(all.count(_.isInstanceOf[OsmNode]) == 9720)
     assert(all.count(_.isInstanceOf[OsmWay]) == 1348)
@@ -38,6 +42,7 @@ class PbfDecodeSpec extends AnyFunSuite {
   }
 
   test("golden: block-2 first node and first way id") {
+    assumeFile(fixture)
     val in = new FileRangeReader(fixture)
     try {
       val block2 = PbfScanner.scan(in, 48116, in.size, allKinds).toList
@@ -56,6 +61,7 @@ class PbfDecodeSpec extends AnyFunSuite {
   }
 
   test("tags decode as maps; some node has tags; ways have refs in order") {
+    assumeFile(fixture)
     val all = PbfScanner.scanFile(fixture).toList
     assert(all.exists(e => e.isInstanceOf[OsmNode] && e.tags.nonEmpty))
     val ways = all.collect { case w: OsmWay => w }
@@ -67,6 +73,7 @@ class PbfDecodeSpec extends AnyFunSuite {
   }
 
   test("fixture has no metadata (omitmeta extract) -> info is None") {
+    assumeFile(fixture)
     val n = PbfScanner.scanFile(fixture, Set(EntityKind.Node), withInfo = true)
       .collectFirst { case n: OsmNode => n }.get
     assert(n.info.isEmpty)
@@ -113,6 +120,7 @@ class PbfDecodeSpec extends AnyFunSuite {
   }
 
   test("split invariance: any boundary set reproduces the full scan") {
+    assumeFile(fixture)
     val in = new FileRangeReader(fixture)
     try {
       val whole = PbfScanner.scan(in, 0, fileSize, allKinds).map(_.id).toList
@@ -129,6 +137,7 @@ class PbfDecodeSpec extends AnyFunSuite {
   }
 
   test("split at exact block boundaries routes each block once") {
+    assumeFile(fixture)
     val in = new FileRangeReader(fixture)
     try {
       val whole = PbfScanner.scan(in, 0, fileSize, allKinds).size

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.FixtureGuard.assumeFile
 
 /** Vectorized dense-node scan path: same results as the row path, batches
   * confirmed by the ColumnarToRow transition in the physical plan.
@@ -16,6 +17,7 @@ class OsmPbfColumnarSpec extends AnyFunSuite {
     .option("parseType", "node").load(fixture)
 
   test("pruned id/lat/lon scan goes columnar") {
+    assumeFile(fixture)
     val df = nodes.select("id", "lat", "lon")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"), plan)
@@ -23,6 +25,7 @@ class OsmPbfColumnarSpec extends AnyFunSuite {
   }
 
   test("columnar and row paths produce identical aggregates") {
+    assumeFile(fixture)
     val cols = nodes.select("id", "lat", "lon")
       .agg(sum("id"), sum("lat"), sum("lon"), count(lit(1))).collect()(0)
     val rows = nodes.select("id", "lat", "lon", "tags") // tags forces row path
@@ -34,6 +37,7 @@ class OsmPbfColumnarSpec extends AnyFunSuite {
   }
 
   test("golden first node survives the columnar path") {
+    assumeFile(fixture)
     val r = nodes.select("id", "lat", "lon")
       .filter(col("id") === 108424353L).collect()(0)
     assert(math.abs(r.getDouble(1) - 10.4769503) < 1e-9)
@@ -41,11 +45,13 @@ class OsmPbfColumnarSpec extends AnyFunSuite {
   }
 
   test("tags projection falls back to the row reader") {
+    assumeFile(fixture)
     val plan = nodes.select("id", "tags").queryExecution.executedPlan.toString
     assert(!plan.contains("ColumnarToRow"), plan)
   }
 
   test("README tile query runs on the columnar path with exact totals") {
+    assumeFile(fixture)
     val s = 2048
     val df = nodes
       .withColumn("tile",

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.FixtureGuard.assumeFile
 
 /** COUNT(*) aggregate pushdown on the osmpbf source: Catalyst hands the
   * count to the scan (per-partition partial counts from the decode-free
@@ -22,6 +23,7 @@ class OsmPbfCountPushdownSpec extends AnyFunSuite {
   }
 
   test("count(*) is pushed to the scan and matches the row count") {
+    assumeFile(fixture)
     val df = read()
     val rowCount = df.rdd.count() // RDD path cannot use the pushed agg
     val pushed = df.count()
@@ -32,6 +34,7 @@ class OsmPbfCountPushdownSpec extends AnyFunSuite {
   }
 
   test("pushed count respects parseType and pushed type filters") {
+    assumeFile(fixture)
     val all = read()
     val nodes = read("parseType" -> "node")
     val ways = read("parseType" -> "way")
@@ -46,6 +49,7 @@ class OsmPbfCountPushdownSpec extends AnyFunSuite {
   }
 
   test("MIN/MAX(id) push down with COUNT in one pass and match the row scan") {
+    assumeFile(fixture)
     import org.apache.spark.sql.functions.{count => cnt, lit, max, min}
     val df = read()
     val agg = df.agg(cnt(lit(1)).as("n"), min(col("id")).as("mn"),
@@ -75,6 +79,7 @@ class OsmPbfCountPushdownSpec extends AnyFunSuite {
   }
 
   test("LIMIT pushes a per-partition row cap to the scan") {
+    assumeFile(fixture)
     val df = read().limit(5)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("pushedLimit=5"), s"expected a pushed limit:\n$plan")
@@ -86,6 +91,7 @@ class OsmPbfCountPushdownSpec extends AnyFunSuite {
   }
 
   test("grouped or column counts do NOT push down (scan still correct)") {
+    assumeFile(fixture)
     val df = read()
     val grouped = df.groupBy(col("type")).count()
     val plan = grouped.queryExecution.executedPlan.toString

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.FixtureGuard.assumeFile
 
 /** PERMISSIVE-mode fuzz: random byte flips anywhere in a real PBF file
   * must never escape the scan as an exception — blocks that stop
@@ -16,6 +17,7 @@ class OsmPbfFuzzSpec extends AnyFunSuite {
   private val fixture = "/root/reference/src/test/java/resources/temp.dat"
 
   test("random byte flips never throw under mode=PERMISSIVE") {
+    assumeFile(fixture)
     val clean = Files.readAllBytes(Paths.get(fixture))
     val total = spark.read.format("osmpbf").load(fixture).count()
     val rnd = new scala.util.Random(4242)
@@ -39,6 +41,7 @@ class OsmPbfFuzzSpec extends AnyFunSuite {
   }
 
   test("random byte flips never throw on the columnar projection either") {
+    assumeFile(fixture)
     val clean = Files.readAllBytes(Paths.get(fixture))
     val rnd = new scala.util.Random(77)
     val dir = Files.createTempDirectory("osmpbf-fuzz-col")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.FixtureGuard.assumeFile
 
 /** End-to-end `spark.read.format("osmpbf")` tests against the reference
   * fixture (FIXTURES.md golden values) — SURVEY §5.3.
@@ -16,6 +17,7 @@ class OsmPbfSourceSpec extends AnyFunSuite {
     spark.read.format("osmpbf").option("parseType", tpe).load(fixture)
 
   test("SQL DDL surface: CREATE ... USING osmpbf (the Pig LOAD twin)") {
+    assumeFile(fixture)
     spark.sql(s"""CREATE OR REPLACE TEMPORARY VIEW osm_nodes_ddl
                  |USING osmpbf
                  |OPTIONS (path '$fixture', parseType 'node')""".stripMargin)
@@ -28,6 +30,7 @@ class OsmPbfSourceSpec extends AnyFunSuite {
   }
 
   test("node scan: count and golden first row") {
+    assumeFile(fixture)
     val nodes = read("node")
     assert(nodes.count() == 9720)
     val first = nodes.orderBy(col("id")).limit(1).collect()(0)
@@ -36,12 +39,14 @@ class OsmPbfSourceSpec extends AnyFunSuite {
   }
 
   test("golden lat/lon of node 108424353") {
+    assumeFile(fixture)
     val r = read("node").filter(col("id") === 108424353L).collect()(0)
     assert(math.abs(r.getAs[Double]("lat") - 10.4769503) < 1e-9)
     assert(math.abs(r.getAs[Double]("lon") - -64.1847472) < 1e-9)
   }
 
   test("way scan: count, golden id, ordered (pos, nodeId) structs") {
+    assumeFile(fixture)
     val ways = read("way")
     assert(ways.count() == 1348)
     assert(ways.agg(min("id")).collect()(0).getLong(0) == 102348670L)
@@ -54,6 +59,7 @@ class OsmPbfSourceSpec extends AnyFunSuite {
   }
 
   test("relation scan: 5 relations with typed members") {
+    assumeFile(fixture)
     val rels = read("relation")
     assert(rels.count() == 5)
     val members = rels.select(explode(col("members")).as("m"))
@@ -65,6 +71,7 @@ class OsmPbfSourceSpec extends AnyFunSuite {
   }
 
   test("unified scan with type column; counts per type") {
+    assumeFile(fixture)
     val all = spark.read.format("osmpbf").load(fixture)
     val counts = all.groupBy("type").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -72,6 +79,7 @@ class OsmPbfSourceSpec extends AnyFunSuite {
   }
 
   test("type filter pushes down to group-kind pruning") {
+    assumeFile(fixture)
     val all = spark.read.format("osmpbf").load(fixture)
     val plan = all.filter(col("type") === "way").queryExecution
       .executedPlan.toString
@@ -80,6 +88,7 @@ class OsmPbfSourceSpec extends AnyFunSuite {
   }
 
   test("tags surface as a real map column") {
+    assumeFile(fixture)
     val tagged = read("node").select(col("id"),
       element_at(col("tags"), "created_by").as("cb"))
       .filter(col("cb").isNotNull)
@@ -87,6 +96,7 @@ class OsmPbfSourceSpec extends AnyFunSuite {
   }
 
   test("split into many partitions reproduces exact counts") {
+    assumeFile(fixture)
     val df = spark.read.format("osmpbf").option("parseType", "node")
       .load(fixture)
     withMaxPartitionBytes("8192") {
@@ -100,6 +110,7 @@ class OsmPbfSourceSpec extends AnyFunSuite {
   }
 
   test("README tile query (SURVEY §2.1 downstream pattern)") {
+    assumeFile(fixture)
     val s = 2048
     val nodes = read("node")
     val tiles = nodes

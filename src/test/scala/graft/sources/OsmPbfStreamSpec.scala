@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.FixtureGuard.assumeFile
 
 /** Streaming osmpbf source: files dropped into a directory become
   * micro-batches; counts accumulate exactly once per file.
@@ -15,6 +16,7 @@ class OsmPbfStreamSpec extends AnyFunSuite {
   private val fixture = "/root/reference/src/test/java/resources/temp.dat"
 
   test("file arrivals stream as micro-batches with exact counts") {
+    assumeFile(fixture)
     val dir = Files.createTempDirectory("pbf-stream")
     val stream = spark.readStream.format("osmpbf")
       .option("parseType", "node").load(dir.toString)
@@ -39,6 +41,7 @@ class OsmPbfStreamSpec extends AnyFunSuite {
   }
 
   test("maxFilesPerTrigger paces a backlog across micro-batches, exactly once") {
+    assumeFile(fixture)
     for (mode <- Seq("list", "watermark")) {
       val dir = Files.createTempDirectory(s"pbf-stream-paced-$mode")
       // a 5-file backlog EXISTS before the query starts: without
@@ -87,6 +90,7 @@ class OsmPbfStreamSpec extends AnyFunSuite {
   }
 
   test("maxBytesPerTrigger paces by bytes; composite takes the tighter cap") {
+    assumeFile(fixture)
     val fixSize = Files.size(Paths.get(fixture))
     // byte budget of ~2.5 files: batches of exactly 2, soft-cap style
     val dir = Files.createTempDirectory("pbf-stream-bytes")
@@ -132,6 +136,7 @@ class OsmPbfStreamSpec extends AnyFunSuite {
   }
 
   test("watermark offset mode streams exactly once with bounded offsets") {
+    assumeFile(fixture)
     val dir = Files.createTempDirectory("pbf-stream-wm")
     val stream = spark.readStream.format("osmpbf")
       .option("parseType", "node")
@@ -160,6 +165,7 @@ class OsmPbfStreamSpec extends AnyFunSuite {
   }
 
   test("watermark batch replay is served from the batch log, not the live directory") {
+    assumeFile(fixture)
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     import graft.sources.osmpbf.OsmPbfMicroBatchStream
     import graft.pbf.EntityKind
@@ -206,6 +212,7 @@ class OsmPbfStreamSpec extends AnyFunSuite {
   }
 
   test("streaming projection prunes like the batch path") {
+    assumeFile(fixture)
     val dir = Files.createTempDirectory("pbf-stream2")
     Files.copy(Paths.get(fixture), dir.resolve("a.pbf"))
     val stream = spark.readStream.format("osmpbf")

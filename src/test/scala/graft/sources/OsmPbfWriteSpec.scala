@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkTestSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.FixtureGuard.assumeFile
 
 /** Write-side round trip: the reference fixture decoded by our scan,
   * re-encoded by `df.write.format("osmpbf")`, and decoded again must be
@@ -24,6 +25,7 @@ class OsmPbfWriteSpec extends AnyFunSuite {
     df.collect().map(_.toString).sorted.toSeq
 
   test("fixture -> write -> read round trip is row-identical") {
+    assumeFile(fixture)
     val dir = java.nio.file.Files.createTempDirectory("pbf-w").toString
     val src = readAll(fixture)
     src.write.format("osmpbf")
@@ -35,6 +37,7 @@ class OsmPbfWriteSpec extends AnyFunSuite {
   }
 
   test("multi-partition write produces one decodable file per partition") {
+    assumeFile(fixture)
     val dir = java.nio.file.Files.createTempDirectory("pbf-w3").toString
     readAll(fixture).repartition(3)
       .write.format("osmpbf").option("withInfo", "false")
@@ -46,6 +49,7 @@ class OsmPbfWriteSpec extends AnyFunSuite {
   }
 
   test("commit protocol: no in-progress temps survive, reader skips them") {
+    assumeFile(fixture)
     val dir = java.nio.file.Files.createTempDirectory("pbf-cp").toString
     val src = readAll(fixture)
     src.repartition(3).write.format("osmpbf")
@@ -66,6 +70,7 @@ class OsmPbfWriteSpec extends AnyFunSuite {
   }
 
   test("overwrite truncates previous part files") {
+    assumeFile(fixture)
     val dir = java.nio.file.Files.createTempDirectory("pbf-wo").toString
     val src = readAll(fixture)
     src.repartition(4).write.format("osmpbf")
@@ -79,6 +84,7 @@ class OsmPbfWriteSpec extends AnyFunSuite {
   }
 
   test("node-projected schema writes and reads back") {
+    assumeFile(fixture)
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("pbf-wn").toString

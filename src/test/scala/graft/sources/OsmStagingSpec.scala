@@ -6,6 +6,7 @@ import graft.SparkTestSession
 import graft.sources.osmpbf.OsmStaging
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.FixtureGuard.assumeFile
 
 /** The Verify-time PBF→parquet staging that feeds the osm DuckDB
   * oracles: the staged frames must be a faithful parquet image of the
@@ -17,6 +18,12 @@ import org.scalatest.funsuite.AnyFunSuite
 class OsmStagingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
+  // staging decodes temp.dat AND the sample.pbf packed in the jar
+  private def assumeFixtures(): Unit = {
+    assumeFile(graft.queries.OsmQueries.fixturePath)
+    assumeFile(graft.queries.OsmQueries.upstreamJarPath)
+  }
+
   private lazy val dir = {
     val d = Files.createTempDirectory("osm-staging-spec").toString
     OsmStaging.stage(spark, d)
@@ -25,6 +32,7 @@ class OsmStagingSpec extends AnyFunSuite {
 
   test("staged frames mirror the source decode: counts and partition " +
       "of entities into nodes/ways/rels") {
+    assumeFixtures()
     val nodes = spark.read.parquet(s"$dir/nodes").count()
     val ways = spark.read.parquet(s"$dir/ways").count()
     val rels = spark.read.parquet(s"$dir/rels").count()
@@ -39,6 +47,7 @@ class OsmStagingSpec extends AnyFunSuite {
   }
 
   test("entities carries the record-key metadata as plain columns") {
+    assumeFixtures()
     val e = spark.read.parquet(s"$dir/entities")
     assert(e.columns.toSet ==
       Set("id", "type", "lat", "lon", "tags", "block_offset",
@@ -50,6 +59,7 @@ class OsmStagingSpec extends AnyFunSuite {
   }
 
   test("the tags map survives the parquet round trip in file order") {
+    assumeFixtures()
     import spark.implicits._
     val src = spark.read.format("osmpbf").option("parseType", "node")
       .load(graft.queries.OsmQueries.fixturePath)
@@ -67,6 +77,7 @@ class OsmStagingSpec extends AnyFunSuite {
   }
 
   test("header frame: one row per file, each identifiable by path") {
+    assumeFixtures()
     val h = spark.read.parquet(s"$dir/header").collect()
     assert(h.length == 2)
     // BOTH fixtures carry OSMHeader blocks — temp.dat was long assumed

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.FixtureGuard.assumeFile
 
 /** Second real-world fixture: the upstream OSM-binary `sample.pbf`
   * bundled inside the reference's osmpbf jar (FIXTURES.md §3) — written
@@ -16,7 +17,7 @@ class UpstreamSampleSpec extends AnyFunSuite {
 
   private lazy val path: String = {
     val jar = new java.util.jar.JarFile(
-      new java.io.File("/root/reference/lib/osmpbf-1.3.3.jar"))
+      new java.io.File(graft.queries.OsmQueries.upstreamJarPath))
     val entry = jar.getEntry("sample.pbf")
     val out = Files.createTempFile("sample", ".pbf")
     val in = jar.getInputStream(entry)
@@ -26,6 +27,7 @@ class UpstreamSampleSpec extends AnyFunSuite {
   }
 
   test("upstream sample decodes: entities, tags, coordinate sanity") {
+    assumeFile(graft.queries.OsmQueries.upstreamJarPath)
     val all = spark.read.format("osmpbf").load(path)
     val counts = all.groupBy("type").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
