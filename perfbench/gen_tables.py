@@ -38,16 +38,24 @@ def events(rng, n):
 
 
 def documents(rng, n):
-    texts = []
+    """Every seed gives about the same amount of work: text lengths spread
+    evenly over 10 to 100 words, and the same number of copies (5% near
+    duplicates, 0.2% exact ones), each of an earlier original, never of a
+    copy. The seed picks the words, the order of the lengths, the copies'
+    places and their originals."""
+    lengths = rng.permutation(10 + np.arange(n) * 91 // n)
+    n_near, n_exact = n * 5 // 100, n * 2 // 1000
+    copies = rng.choice(np.arange(1, n), n_near + n_exact, replace=False)
+    exact = set(copies[:n_exact].tolist())
+    copies = set(copies.tolist())
+    texts, originals = [], []
     for i in range(n):
-        r = rng.random()
-        if i > 0 and r < 0.05:    # near duplicate of an earlier document
-            texts.append(texts[rng.integers(0, i)] + " dup")
-        elif i > 0 and r < 0.052:  # exact duplicate
-            texts.append(texts[rng.integers(0, i)])
+        if i in copies:
+            src = texts[originals[rng.integers(0, len(originals))]]
+            texts.append(src if i in exact else src + " dup")
         else:
-            k = int(rng.integers(10, 101))
-            texts.append(" ".join(rng.choice(WORDS, k)))
+            originals.append(i)
+            texts.append(" ".join(rng.choice(WORDS, int(lengths[i]))))
     return pd.DataFrame({
         "doc_id": np.arange(n, dtype=np.int64),
         "text": texts,

@@ -143,7 +143,9 @@ def osm_input(cp, seed):
 
 
 def table_input(seed):
-    out = os.path.join(CACHE, f"tables-{seed}")
+    with open(os.path.join(BENCH, "gen_tables.py"), "rb") as f:
+        version = hashlib.sha256(f.read()).hexdigest()[:12]
+    out = os.path.join(CACHE, f"tables-{seed}-{version}")
     if not os.path.isdir(out):
         log(f"generating the tables for seed {seed}")
         import gen_tables

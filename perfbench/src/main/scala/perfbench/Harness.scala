@@ -11,11 +11,14 @@ import org.apache.spark.sql.SparkSession
 /** The benchmark's measuring process: one local Spark session with a
   * fixed number of task slots, one client running operations one after
   * another (a closed loop). A run is a set-up phase ending with one
-  * untimed warm round at full scale, then a fixed number of timed rounds
-  * of the same operations: `--seconds` / [[NominalRoundS]], at least
-  * [[MinRounds]]. The rounds keep getting faster for a while after the
-  * warm round (JIT), so every run times the same rounds, whatever their
-  * duration on the host at hand, rather than as many as fit in a time.
+  * untimed cold round at full scale, [[WarmRounds]] - 1 further untimed
+  * rounds, then a fixed number of timed rounds of the same operations:
+  * `--seconds` / [[NominalRoundS]], at least [[MinRounds]]. The rounds
+  * keep getting faster for several rounds after the cold one (JIT of
+  * Catalyst and of graft's kernels), so the timed rounds start past the
+  * steepest part of that curve, and every run times the same rounds,
+  * whatever their duration on the host at hand, rather than as many as
+  * fit in a time.
   *
   * With `--trace 0` it writes the end-to-end metrics (medians over the
   * timed rounds); with `--trace 1` it records spans, runs the PBF decode
@@ -24,13 +27,18 @@ import org.apache.spark.sql.SparkSession
   */
 object Harness {
   val MinRounds = 3
+  /** untimed rounds before the timed ones, the cold round included */
+  val WarmRounds = 2
   /** `--seconds` buys one timed round per this many seconds */
-  val NominalRoundS = 5
+  val NominalRoundS = 4
   /** no new timed round starts once this much of the run has passed */
   val BudgetS = 90.0
 
-  /** task slots of the local session */
-  val Slots: Int = math.min(4, Runtime.getRuntime.availableProcessors)
+  /** task slots of the local session: two, so that on a 4-vCPU host the
+    * driver thread, the JIT compiler and GC threads do not contend with
+    * the tasks (with four slots, `entries` rounds ran slower and spread
+    * wider between runs) */
+  val Slots: Int = math.min(2, Runtime.getRuntime.availableProcessors)
 
   final case class Args(workload: String, seconds: Int, trace: Boolean,
       work: String, out: String, osm: Option[String], osmExpected: Option[String],
@@ -91,6 +99,7 @@ object Harness {
       w
     }
 
+    val allRounds = ArrayBuffer.empty[(String, Round)]
     def runRound(w: Workload, k: Int, parent: Int): Round = {
       w.prepare(k)
       val key = s"${w.name}/r$k/"
@@ -130,30 +139,35 @@ object Harness {
       for ((op, v) <- results) errors ++= w.check(op, v).map(e => s"${w.name} round $k: $e")
       errors ++= w.crossCheck(results.toMap).map(e => s"${w.name} round $k: $e")
       System.gc()
-      Round(k, seconds, endMs, opSeconds.toMap, stats, idle, builds, hits)
+      val round = Round(k, seconds, endMs, opSeconds.toMap, stats, idle, builds, hits)
+      allRounds += w.name -> round
+      round
     }
 
-    /** The warm round, then `rounds` timed rounds; returns (warm, timed). */
-    def protocol(w: Workload, parent: Int, rounds: Int): (Round, Seq[Round]) = {
+    /** The cold round, the other `warmRounds` - 1 untimed rounds, then
+      * `rounds` timed rounds; returns (cold, timed). */
+    def protocol(w: Workload, parent: Int, warmRounds: Int, rounds: Int): (Round, Seq[Round]) = {
       graft.MemoLedger.drainForeignHits()
-      val warm = runRound(w, 0, parent)
+      val cold = runRound(w, 0, parent)
+      (1 until warmRounds).foreach(k => runRound(w, k, parent))
       val timed = ArrayBuffer.empty[Round]
       def sinceStart = (System.currentTimeMillis() - processStartMs) / 1e3
       while (timed.isEmpty || timed.size < rounds && sinceStart < BudgetS)
-        timed += runRound(w, timed.size + 1, parent)
+        timed += runRound(w, warmRounds + timed.size, parent)
       timed.foreach { r =>
-        if (r.memoBuilds.sorted != warm.memoBuilds.sorted)
+        if (r.memoBuilds.sorted != cold.memoBuilds.sorted)
           errors += s"${w.name} round ${r.index} built memos ${r.memoBuilds.mkString(",")} " +
-            s"but the warm round built ${warm.memoBuilds.mkString(",")}"
+            s"but the cold round built ${cold.memoBuilds.mkString(",")}"
       }
-      (warm, timed.toSeq)
+      (cold, timed.toSeq)
     }
 
     val main = make(a.workload)
     val rootSpan = tracer.newId()
     val rootStartUs = tracer.nowUs
-    val (warm, timed) = protocol(main, rootSpan, math.max(MinRounds, a.seconds / NominalRoundS))
-    val setupS = (warm.endMs - processStartMs) / 1e3
+    val (cold, timed) =
+      protocol(main, rootSpan, WarmRounds, math.max(MinRounds, a.seconds / NominalRoundS))
+    val setupS = (cold.endMs - processStartMs) / 1e3
     tracer.record(rootSpan, 0, s"workload ${a.workload}", rootStartUs, tracer.nowUs)
     def med(f: Round => Double): Double = DecodeLadder.median(timed.map(f))
 
@@ -186,12 +200,12 @@ object Harness {
           ("memo.builds", _.memoBuilds.size.toDouble, "count"),
           ("memo.foreign_hits", _.foreignHits.size.toDouble, "count"))
         perRound.foreach { case (n, f, u) => layers += ((n, med(f), u)) }
-        // every other workload: one warm and one traced round, so that
+        // every other workload: one cold and one traced round, so that
         // each traced run measures every operation's per-layer figures
         Workload.names.filterNot(_ == a.workload).foreach { other =>
           val span = tracer.newId()
           val s0 = tracer.nowUs
-          val (_, rounds) = protocol(make(other), span, 1)
+          val (_, rounds) = protocol(make(other), span, 1, 1)
           tracer.record(span, 0, s"workload $other", s0, tracer.nowUs)
           opMetrics(rounds, Workload.opsOf(other))
         }
@@ -224,11 +238,11 @@ object Harness {
         n -> Json.obj(Seq("value" -> Json.num(v), "unit" -> Json.str(u)))
       }),
       "session_s" -> Json.num((sessionReadyMs - processStartMs) / 1e3),
-      "rounds" -> Json.arr((warm +: timed).map(r => Json.obj(Seq(
-        "round" -> r.index.toString,
+      "rounds" -> Json.arr(allRounds.toSeq.map { case (wn, r) => Json.obj(Seq(
+        "workload" -> Json.str(wn), "round" -> r.index.toString,
         "round_s" -> Json.num(r.seconds), "cpu_s" -> Json.num(r.cpuS),
         "shuffle_mb" -> Json.num(r.shuffleMb),
-        "ops" -> Json.obj(r.opSeconds.toSeq.map { case (k, v) => k -> Json.num(v) })))) ),
+        "ops" -> Json.obj(r.opSeconds.toSeq.map { case (k, v) => k -> Json.num(v) }))) }),
       "outputs" -> Json.arr(outputs)))
     java.nio.file.Files.writeString(java.nio.file.Paths.get(a.out), result)
     spark.stop()

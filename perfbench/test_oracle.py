@@ -70,6 +70,14 @@ class GeneratorTest(unittest.TestCase):
             self.assertTrue(ta.equals(pq.read_table(os.path.join(b, "documents.parquet"))))
             self.assertFalse(ta.equals(pq.read_table(os.path.join(c, "documents.parquet"))))
 
+    def test_every_seed_makes_the_same_copies(self):
+        import numpy as np
+        for seed in (3, 4):
+            docs = gen_tables.documents(np.random.default_rng([seed, 1]), 500)
+            near = docs.text.str.endswith(" dup")
+            self.assertEqual(near.sum(), 25)
+            self.assertEqual((docs.text.duplicated() & ~near).sum(), 1)
+
 
 if __name__ == "__main__":
     unittest.main()
