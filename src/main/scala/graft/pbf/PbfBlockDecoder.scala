@@ -154,10 +154,35 @@ object PbfBlockDecoder {
   // ---- PrimitiveBlock ----------------------------------------------------
 
   /** Per-block string dictionary (osmformat.proto:131-133); index 0 is the
-    * reserved empty string.
+    * reserved empty string. Entries are byte spans of the inflated
+    * payload `buf`; `entries` decodes them to Strings on first use, so a
+    * reader that copies UTF-8 bytes straight into rows never pays for
+    * String objects.
     */
-  final class StringTable(val entries: Array[String]) {
+  final class StringTable(val buf: Array[Byte], offsets: Array[Int], lengths: Array[Int]) {
+    def size: Int = offsets.length
+    def offset(i: Int): Int = offsets(i)
+    def length(i: Int): Int = lengths(i)
+    lazy val entries: Array[String] = {
+      val out = new Array[String](size)
+      var i = 0
+      while (i < size) {
+        out(i) = new String(buf, offsets(i), lengths(i), StandardCharsets.UTF_8)
+        i += 1
+      }
+      out
+    }
     def apply(i: Int): String = entries(i)
+    /** Entries `a` and `b` hold the same bytes (duplicate entries are
+      * legal).
+      */
+    def sameString(a: Int, b: Int): Boolean = a == b || {
+      val n = lengths(a)
+      val oa = offsets(a)
+      val ob = offsets(b)
+      n == lengths(b) && (n == 0 || buf(oa) == buf(ob)) &&
+        java.util.Arrays.equals(buf, oa, oa + n, buf, ob, ob + n)
+    }
   }
 
   final case class RawGroup(
@@ -206,17 +231,23 @@ object PbfBlockDecoder {
   }
 
   private def parseStringTable(r: ProtoReader): StringTable = {
-    val out = ArrayBuffer.empty[String]
+    val offsets = new IntBuf
+    val lengths = new IntBuf
     var tag = r.readTag()
     while (tag != -1) {
       if ((tag >> 3) == 1) {
         val len = r.readVarint().toInt
-        out += new String(r.buf, r.pos, len, StandardCharsets.UTF_8)
+        // the span check String decoding makes
+        if (len < 0 || r.pos + len > r.buf.length)
+          throw new StringIndexOutOfBoundsException(
+            s"string of $len bytes at ${r.pos} overruns the block")
+        offsets += r.pos
+        lengths += len
         r.pos += len
       } else r.skip(tag & 7)
       tag = r.readTag()
     }
-    new StringTable(out.toArray)
+    new StringTable(r.buf, offsets.toArray, lengths.toArray)
   }
 
   private def parseGroup(r: ProtoReader): RawGroup = {
@@ -467,7 +498,7 @@ object PbfBlockDecoder {
     * the COUNT and MIN/MAX pushdown walkers so their validation cannot
     * drift.
     */
-  private def countVarintsInSpan(r: ProtoReader): Long = {
+  private[pbf] def countVarintsInSpan(r: ProtoReader): Long = {
     val len = r.readVarint().toInt
     val end = r.pos + len
     require(end <= r.end, "DenseNodes packed field overruns the group")
@@ -590,7 +621,7 @@ object PbfBlockDecoder {
       if (withInfo && denseInfo != null)
         decodeDenseInfo(block, denseInfo, ids.length)
       else null
-    val st = block.strings
+    val st = block.strings.entries
     val n = ids.length
     val out = new Array[OsmNode](n)
     var id = 0L; var lat = 0L; var lon = 0L; var kv = 0
@@ -647,7 +678,7 @@ object PbfBlockDecoder {
         if (i < versions.length) versions(i) else -1,
         ts * block.dateGranularity,
         cs, uid,
-        if (sid > 0 && sid < block.strings.entries.length) block.strings(sid) else "",
+        if (sid > 0 && sid < block.strings.size) block.strings(sid) else "",
         if (i < visibles.length) visibles(i) != 0 else true)
       i += 1
     }
@@ -778,7 +809,7 @@ object PbfBlockDecoder {
       tag = r.readTag()
     }
     OsmInfo(version, ts * block.dateGranularity, cs, uid,
-      if (sid > 0 && sid < block.strings.entries.length) block.strings(sid) else "",
+      if (sid > 0 && sid < block.strings.size) block.strings(sid) else "",
       visible)
   }
 

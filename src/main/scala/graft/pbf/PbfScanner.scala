@@ -237,27 +237,22 @@ object PbfScanner {
       }
     }
 
-  /** Per-block entity iterators — the provenance-aware scan: callers that
-    * need record keys (file/block-offset metadata columns, parity with
-    * the reference's byte-offset key, OsmPbfRecordReader.java:68-72)
-    * learn each entity's enclosing block frame start for free.
-    */
-  /** Corrupt-block policy: a frame can pass header validation and still
+  /** Inflated and parsed OSMData blocks whose frame starts in [start, end).
+    *
+    * Corrupt-block policy: a frame can pass header validation and still
     * carry an undecodable payload (truncated zlib, mangled protobuf). At
     * 100 TB a scan WILL meet one eventually; `permissive = true` skips
     * the block (the realignment machinery already finds the next frame)
     * instead of failing the whole task — the same PERMISSIVE/FAILFAST
     * contract as Spark's json/csv sources, default FAILFAST.
     */
-  def scanBlocks(
+  def parsedBlocks(
       in: RangeReader,
       start: Long,
       end: Long,
-      kinds: Set[EntityKind.Value],
-      withInfo: Boolean = false,
       permissive: Boolean = false,
-      skips: SkipListener = SkipListener.Logging,
-      withTags: Boolean = true): Iterator[(BlockRef, Iterator[OsmEntity])] =
+      skips: SkipListener = SkipListener.Logging)
+      : Iterator[(BlockRef, PbfBlockDecoder.PrimitiveBlock)] =
     blocksInRange(in, start, end, permissive, skips).flatMap { b =>
       // the read happens OUTSIDE the permissive guard: IO errors are
       // transient infrastructure failures that must fail the task (and
@@ -266,11 +261,7 @@ object PbfScanner {
       in.read(b.dataStart, data, 0, b.dataSize)
       try {
         val payload = PbfBlockDecoder.inflateBlob(data, 0, b.dataSize)
-        val entities = PbfBlockDecoder.decodeEntities(
-          PbfBlockDecoder.parsePrimitiveBlock(payload), kinds, withInfo, withTags)
-        // entity decode is lazy — in permissive mode a mid-block decode
-        // failure must truncate THIS block's iteration, not kill the scan
-        Iterator.single((b, if (permissive) tolerant(entities, b.start, skips) else entities))
+        Iterator.single((b, PbfBlockDecoder.parsePrimitiveBlock(payload)))
       } catch {
         case e: Exception if permissive && !e.isInstanceOf[java.io.IOException] =>
           skips.skippedBlock(b.start, String.valueOf(e.getMessage))
@@ -281,7 +272,7 @@ object PbfScanner {
   /** Count entities in a byte range without materializing rows — the
     * executor side of COUNT(*) aggregate pushdown. FAILFAST uses the
     * decode-free varint-walk counter; PERMISSIVE counts through the
-    * normal tolerant decode iterator instead, so a partially-corrupt
+    * row scan's [[EntityCursor]] instead, so a partially-corrupt
     * block contributes exactly the records a row scan would have
     * produced (the fast path could only skip the whole block, silently
     * disagreeing with the scan it replaces).
@@ -293,10 +284,13 @@ object PbfScanner {
       kinds: Set[EntityKind.Value],
       permissive: Boolean = false,
       skips: SkipListener = SkipListener.Logging): Long =
-    if (permissive)
-      scanBlocks(in, start, end, kinds, withInfo = false, permissive = true,
-        skips, withTags = false).map(_._2.size.toLong).sum
-    else
+    if (permissive) {
+      val c = new EntityCursor(in, start, end, kinds, withCoords = false,
+        withTags = false, withInfo = false, permissive = true, skips)
+      var n = 0L
+      while (c.next()) n += 1
+      n
+    } else
       blocksInRange(in, start, end).map { b =>
         val data = new Array[Byte](b.dataSize)
         in.read(b.dataStart, data, 0, b.dataSize)
@@ -306,8 +300,8 @@ object PbfScanner {
 
   /** (count, min id, max id) for a byte range — MIN/MAX/COUNT aggregate
     * pushdown. Same policy split as [[countInRange]]: FAILFAST uses the
-    * ids-only walker, PERMISSIVE goes through the tolerant decode
-    * iterator for scan-consistency. Min/max are Long.Max/Long.Min
+    * ids-only walker, PERMISSIVE goes through the row scan's
+    * [[EntityCursor]] for scan-consistency. Min/max are Long.Max/Long.Min
     * sentinels when nothing matched.
     */
   def statsInRange(
@@ -320,16 +314,15 @@ object PbfScanner {
     var n = 0L
     var mn = Long.MaxValue
     var mx = Long.MinValue
-    if (permissive)
-      scanBlocks(in, start, end, kinds, withInfo = false, permissive = true,
-        skips, withTags = false).foreach { case (_, it) =>
-        it.foreach { e =>
-          n += 1
-          if (e.id < mn) mn = e.id
-          if (e.id > mx) mx = e.id
-        }
+    if (permissive) {
+      val c = new EntityCursor(in, start, end, kinds, withCoords = false,
+        withTags = false, withInfo = false, permissive = true, skips)
+      while (c.next()) {
+        n += 1
+        if (c.id < mn) mn = c.id
+        if (c.id > mx) mx = c.id
       }
-    else
+    } else
       blocksInRange(in, start, end).foreach { b =>
         val data = new Array[Byte](b.dataSize)
         in.read(b.dataStart, data, 0, b.dataSize)
@@ -344,7 +337,7 @@ object PbfScanner {
 
   /** Truncate an in-memory decode iterator at the first failure
     * (content corruption only — the payload is already read, so no IO
-    * can occur here). Shared by the row and columnar permissive paths.
+    * can occur here). The columnar permissive path's guard.
     */
   private[graft] def tolerant[T](
       it: Iterator[T],
@@ -378,7 +371,9 @@ object PbfScanner {
       end: Long,
       kinds: Set[EntityKind.Value],
       withInfo: Boolean = false): Iterator[OsmEntity] =
-    scanBlocks(in, start, end, kinds, withInfo).flatMap(_._2)
+    parsedBlocks(in, start, end).flatMap { case (_, block) =>
+      PbfBlockDecoder.decodeEntities(block, kinds, withInfo)
+    }
 
   /** Whole-file convenience scan. */
   def scanFile(

@@ -128,6 +128,28 @@ final class ProtoReader(val buf: Array[Byte], var pos: Int, val end: Int) {
     b.result()
   }
 
+  /** Packed repeated varints appended to `into`: repeated chunks of one
+    * field concatenate, and a reused buffer allocates nothing per message.
+    */
+  def readPackedLongs(zigzag: Boolean, into: LongBuf): Unit = {
+    val len = readLen()
+    val limit = pos + len
+    into.reserve(len / 2 + 1)
+    while (pos < limit) into += (if (zigzag) readSVarint() else readVarint())
+    if (pos != limit)
+      throw new IllegalArgumentException(s"packed field ends mid-varint at $limit")
+  }
+
+  def readPackedInts(zigzag: Boolean, into: IntBuf): Unit = {
+    val len = readLen()
+    val limit = pos + len
+    into.reserve(len / 2 + 1)
+    while (pos < limit)
+      into += (if (zigzag) readSVarint().toInt else readVarint().toInt)
+    if (pos != limit)
+      throw new IllegalArgumentException(s"packed field ends mid-varint at $limit")
+  }
+
   /** Skip a field of the given wire type (unknown-field tolerance). */
   def skip(wireType: Int): Unit = wireType match {
     case 0 => readVarint()
@@ -143,4 +165,45 @@ final class ProtoReader(val buf: Array[Byte], var pos: Int, val end: Int) {
     case other =>
       throw new IllegalArgumentException(s"unsupported wire type $other")
   }
+}
+
+/** Growable `Long` array, reused across messages; valid entries are
+  * `0 until size`.
+  */
+final class LongBuf {
+  private var data = new Array[Long](64)
+  var size = 0
+  def clear(): Unit = size = 0
+  def apply(i: Int): Long = data(i)
+  def update(i: Int, v: Long): Unit = data(i) = v
+  /** Room for `extra` more entries. */
+  def reserve(extra: Int): Unit =
+    if (size + extra > data.length)
+      data = java.util.Arrays.copyOf(data, math.max(size + extra, data.length * 2))
+  def +=(v: Long): Unit = {
+    if (size == data.length) data = java.util.Arrays.copyOf(data, size * 2)
+    data(size) = v
+    size += 1
+  }
+}
+
+/** Growable `Int` array, reused across messages; valid entries are
+  * `0 until size`.
+  */
+final class IntBuf {
+  private var data = new Array[Int](64)
+  var size = 0
+  def clear(): Unit = size = 0
+  def apply(i: Int): Int = data(i)
+  def update(i: Int, v: Int): Unit = data(i) = v
+  /** Room for `extra` more entries. */
+  def reserve(extra: Int): Unit =
+    if (size + extra > data.length)
+      data = java.util.Arrays.copyOf(data, math.max(size + extra, data.length * 2))
+  def +=(v: Int): Unit = {
+    if (size == data.length) data = java.util.Arrays.copyOf(data, size * 2)
+    data(size) = v
+    size += 1
+  }
+  def toArray: Array[Int] = java.util.Arrays.copyOf(data, size)
 }

@@ -47,8 +47,21 @@ object FanOut {
     * still forces every site on (`on`) or off (`off`) for one-variable
     * cluster experiments — at scale a many-splits scan makes every
     * site a structural no-op anyway. */
-  private val envForce: Option[Boolean] =
-    sys.env.get("SPARK_GRAFT_FANOUT").map(_.equalsIgnoreCase("on"))
+  private val envForce: Option[Boolean] = parseForce(sys.env.get("SPARK_GRAFT_FANOUT"))
+
+  /** `on`/`off` (any case) force every site; anything else leaves each
+    * site at its default, with a warning. */
+  private[graft] def parseForce(value: Option[String]): Option[Boolean] =
+    value.map(_.trim.toLowerCase) match {
+      case Some("on") => Some(true)
+      case Some("off") => Some(false)
+      case Some(other) =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"SPARK_GRAFT_FANOUT='$other' is neither 'on' nor 'off'; " +
+            "every fan-out site keeps its default")
+        None
+      case None => None
+    }
 
   /** Test hook (FanOutSpec, VERDICT r15 ask #6): the env flag is fixed
     * at JVM start, but the q53 fan-out-safety spec must run the same

@@ -408,6 +408,8 @@ object OsmQueries {
         val invPath = graft.pbf.SyntheticPbf.ensureFile(16L << 20)
         val key = "spark.sql.files.maxPartitionBytes"
         val prev = s.conf.get(key)
+        val minKey = "spark.sql.files.minPartitionNum"
+        val prevMin = s.conf.getOption(minKey)
         def readAt(p: String, opts: (String, String)*) = {
           val r = s.read.format("osmpbf")
           opts.foreach { case (k, v) => r.option(k, v) }
@@ -467,6 +469,7 @@ object OsmQueries {
             (r.getLong(0) + r.getLong(1), df.rdd.getNumPartitions)
           })
           s.conf.set(key, (1L << 30).toString)
+          s.conf.set(minKey, "1") // or one range per slot
           val (v1, p1, ms1) = timed(() => {
             val df = readAt(invPath)
             val r = df.agg(max($"id"), sum($"id")).collect().head
@@ -481,7 +484,10 @@ object OsmQueries {
             vm == v1 && p1 == 1 && pm >= 8 && nParts >= 8
           all.map { case (m, v, p, ms) => (m, v, p, ms, agree) }
             .toDF("mode", "value", "partitions", "ms", "agree")
-        } finally s.conf.set(key, prev)
+        } finally {
+          s.conf.set(key, prev)
+          prevMin.fold(s.conf.unset(minKey))(s.conf.set(minKey, _))
+        }
       },
       None, benchOnly = true),
 
@@ -508,6 +514,8 @@ object OsmQueries {
         val path = graft.pbf.SyntheticPbf.ensureFile(16L << 20)
         val key = "spark.sql.files.maxPartitionBytes"
         val prev = s.conf.get(key)
+        val minKey = "spark.sql.files.minPartitionNum"
+        val prevMin = s.conf.getOption(minKey)
         def read(opts: (String, String)*) = {
           val r = s.read.format("osmpbf")
           opts.foreach { case (k, v) => r.option(k, v) }
@@ -529,6 +537,7 @@ object OsmQueries {
           val mm = read().agg(count(lit(1)), min($"id"), max($"id"))
             .collect().head
           s.conf.set(key, (1L << 30).toString)
+          s.conf.set(minKey, "1") // or one range per slot
           val nPartsSingle = read().rdd.getNumPartitions
           val sgl = read().agg(sum($"id"), max($"id")).collect().head
           Seq((nRows, nNodes, idMin, idMax, idSum, latMin, lonMax,
@@ -541,7 +550,10 @@ object OsmQueries {
               "lat_min", "lon_max", "pushdown_count_agrees",
               "pushdown_minmax_agrees", "split_invariant",
               "multi_split_ge8", "single_split_is1")
-        } finally s.conf.set(key, prev)
+        } finally {
+          s.conf.set(key, prev)
+          prevMin.fold(s.conf.unset(minKey))(s.conf.set(minKey, _))
+        }
       },
       Some(s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
            |  CAST(COUNT(*) FILTER (WHERE type = 'node') AS BIGINT)

@@ -33,7 +33,7 @@ class OsmPbfColumnarPartitionReader(
 
   private val in = new HadoopRangeReader(new Path(part.filePath), conf.value)
   private val blocks =
-    PbfScanner.blocksInRange(in, part.start, part.end, permissive, skips)
+    PbfScanner.parsedBlocks(in, part.start, part.end, permissive, skips)
 
   private var groups: Iterator[(Array[Long], Array[Double], Array[Double])] =
     Iterator.empty
@@ -42,22 +42,11 @@ class OsmPbfColumnarPartitionReader(
   override def next(): Boolean = {
     while (!groups.hasNext) {
       if (!blocks.hasNext) return false
-      val b = blocks.next()
-      // IO outside the permissive guard (transient errors must retry,
-      // not silently skip); decodeDenseColumns is LAZY, so the tolerant
-      // wrapper covers per-group decode failures too — the same
-      // contract as the row path (PbfScanner.scanBlocks)
-      val data = new Array[Byte](b.dataSize)
-      in.read(b.dataStart, data, 0, b.dataSize)
-      try {
-        val payload = PbfBlockDecoder.inflateBlob(data, 0, b.dataSize)
-        val gs = PbfBlockDecoder.decodeDenseColumns(
-          PbfBlockDecoder.parsePrimitiveBlock(payload))
-        groups = if (permissive) PbfScanner.tolerant(gs, b.start, skips) else gs
-      } catch {
-        case e: Exception if permissive && !e.isInstanceOf[java.io.IOException] =>
-          skips.skippedBlock(b.start, String.valueOf(e.getMessage))
-      }
+      val (ref, block) = blocks.next()
+      // decodeDenseColumns is LAZY, so the tolerant wrapper covers
+      // per-group decode failures — the same contract as the row path
+      val gs = PbfBlockDecoder.decodeDenseColumns(block)
+      groups = if (permissive) PbfScanner.tolerant(gs, ref.start, skips) else gs
     }
     val (ids, lats, lons) = groups.next()
     // release the superseded batch's vectors before allocating the next

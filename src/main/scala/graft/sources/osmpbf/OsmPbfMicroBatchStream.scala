@@ -1,7 +1,5 @@
 package graft.sources.osmpbf
 
-import scala.collection.mutable
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
@@ -41,7 +39,6 @@ import graft.pbf.EntityKind
   */
 class OsmPbfMicroBatchStream(
     requiredSchema: StructType,
-    parseType: String,
     kinds: Set[EntityKind.Value],
     options: CaseInsensitiveStringMap,
     checkpointLocation: String)
@@ -89,10 +86,9 @@ class OsmPbfMicroBatchStream(
         s"maxBytesPerTrigger must be > 0, got $n")
       n
     }
+  private val spark = SparkSession.active
   private val conf = new SerializableConfiguration(
-    SparkSession.active.sessionState.newHadoopConf())
-  private val maxBytes =
-    SparkSession.active.sessionState.conf.filesMaxPartitionBytes
+    spark.sessionState.newHadoopConf())
   private val offsetMode =
     options.getOrDefault("streamOffsetMode", "list").toLowerCase match {
       case m @ ("list" | "watermark") => m
@@ -233,24 +229,15 @@ class OsmPbfMicroBatchStream(
       case other => throw new IllegalStateException(
         s"mixed osmpbf offset kinds: $other")
     }
-    val parts = mutable.ArrayBuffer.empty[InputPartition]
-    for ((path, len) <- fresh) {
-      var off = 0L
-      while (off < len) {
-        val to = math.min(off + maxBytes, len)
-        parts += OsmPbfInputPartition(path, off, to)
-        off = to
-      }
-    }
-    parts.toArray
+    OsmPbfScan.splitFiles(spark, fresh).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val permissive = OsmPbfScan.isPermissive(options)
     val skips =
-      if (permissive) OsmPbfSkipMetrics.registered(SparkSession.active)
+      if (permissive) OsmPbfSkipMetrics.registered(spark)
       else graft.pbf.SkipListener.Logging
-    new OsmPbfPartitionReaderFactory(requiredSchema, parseType, kinds, conf,
+    new OsmPbfPartitionReaderFactory(requiredSchema, kinds, conf,
       permissive, skips)
   }
 

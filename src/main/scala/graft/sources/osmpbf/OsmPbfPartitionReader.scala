@@ -1,24 +1,25 @@
 package graft.sources.osmpbf
 
+import scala.annotation.switch
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter, UnsafeWriter}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.pbf._
 
 /** Executor-side reader: the Spark-native analogue of the reference's
   * RecordReader loop (SURVEY §3 stages 3-4), built on the pure decode core.
-  * Only the columns in `requiredSchema` are materialized; tag / info /
-  * member decoding is skipped entirely when pruned.
+  * Only the columns in `requiredSchema` are materialized; tag and info
+  * decoding is skipped entirely when pruned.
   */
 class OsmPbfPartitionReaderFactory(
     requiredSchema: StructType,
-    parseType: String,
     kinds: Set[EntityKind.Value],
     conf: SerializableConfiguration,
     permissive: Boolean = false,
@@ -27,8 +28,8 @@ class OsmPbfPartitionReaderFactory(
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[OsmPbfInputPartition]
-    val base = new OsmPbfPartitionReader(p, requiredSchema, parseType, kinds,
-      conf, permissive, skips)
+    val base = new OsmPbfPartitionReader(p, requiredSchema, kinds, conf,
+      permissive, skips)
     if (limit < 0) base
     else new PartitionReader[InternalRow] {
       // pushed LIMIT: stop decoding this byte range after `limit` rows
@@ -129,111 +130,191 @@ final class HadoopRangeReader(
 class OsmPbfPartitionReader(
     part: OsmPbfInputPartition,
     requiredSchema: StructType,
-    parseType: String,
     kinds: Set[EntityKind.Value],
     conf: SerializableConfiguration,
     permissive: Boolean = false,
     skips: SkipListener = SkipListener.Logging) extends PartitionReader[InternalRow] {
 
-  private val need = requiredSchema.fieldNames.toSet
-  private val withInfo = need("info")
-  private val withTags = need("tags")
-
   private val in = new HadoopRangeReader(new Path(part.filePath), conf.value)
-  private val blocks =
-    PbfScanner.scanBlocks(in, part.start, part.end, kinds, withInfo, permissive,
-      skips)
-  private var blockEntities: Iterator[OsmEntity] = Iterator.empty
-  // provenance for the metadata columns (stable record identity)
-  private var blockOffset: Long = -1L
-  private var recordIndex: Long = -1L
+  private val need = requiredSchema.fieldNames.toSet
+  private val cursor = new EntityCursor(in, part.start, part.end, kinds,
+    withCoords = need("lat") || need("lon"), withTags = need("tags"),
+    withInfo = need("info"), permissive, skips)
+  private val rows = new OsmRowWriter(requiredSchema, part.filePath)
   private var current: InternalRow = _
 
-  override def next(): Boolean = {
-    while (!blockEntities.hasNext) {
-      if (!blocks.hasNext) return false
-      val (ref, it) = blocks.next()
-      blockOffset = ref.start
-      recordIndex = -1L
-      blockEntities = it
-    }
-    recordIndex += 1
-    current = convert(blockEntities.next())
-    true
-  }
+  override def next(): Boolean =
+    cursor.next() && { current = rows.write(cursor); true }
 
+  /** The same reused row after every `next()`. */
   override def get(): InternalRow = current
 
   override def close(): Unit = in.close()
+}
 
-  // ---- entity -> InternalRow --------------------------------------------
+/** Writes the cursor's current entity into one reused `UnsafeRow` of the
+  * pruned schema: a writer per column is chosen once, strings are copied
+  * as UTF-8 bytes straight from the block's string table, and nothing is
+  * allocated per row (the buffer only grows).
+  */
+final class OsmRowWriter(schema: StructType, filePath: String) {
+  import OsmRowWriter._
 
-  private val fieldWriters: Array[OsmEntity => Any] =
-    requiredSchema.fields.map(f => writerFor(f.name))
-
-  private def convert(e: OsmEntity): InternalRow = {
-    val row = new GenericInternalRow(fieldWriters.length)
-    var i = 0
-    while (i < fieldWriters.length) {
-      row.update(i, fieldWriters(i)(e))
-      i += 1
-    }
-    row
-  }
-
-  private def writerFor(name: String): OsmEntity => Any = name match {
-    case "type" => {
-      case _: OsmNode => UTF8String.fromString("node")
-      case _: OsmWay => UTF8String.fromString("way")
-      case _: OsmRelation => UTF8String.fromString("relation")
-    }
-    case "id" => e => e.id
-    case "lat" => { case n: OsmNode => n.lat; case _ => null }
-    case "lon" => { case n: OsmNode => n.lon; case _ => null }
-    case "tags" =>
-      e => if (!withTags) null else mapData(e.tags)
-    case "nodes" => {
-      // ordered (pos, nodeId) structs, 1-based pos — Pig loader parity
-      // (OSMPbfPigLoader.java:58-67)
-      case w: OsmWay =>
-        val arr = new Array[Any](w.refs.length)
-        var i = 0
-        while (i < w.refs.length) {
-          arr(i) = new GenericInternalRow(Array[Any](i + 1, w.refs(i)))
-          i += 1
-        }
-        new GenericArrayData(arr)
-      case _ => null
-    }
-    case "members" => {
-      case r: OsmRelation =>
-        new GenericArrayData(r.members.map(m => new GenericInternalRow(
-          Array[Any](UTF8String.fromString(m.role), m.memberId,
-            UTF8String.fromString(m.memberType)))): Array[Any])
-      case _ => null
-    }
-    case "info" =>
-      e => e.info.map(i => new GenericInternalRow(Array[Any](
-        i.version, i.timestampMs * 1000L, i.changeset, i.uid,
-        UTF8String.fromString(i.user), i.visible))).orNull
-    case "_file" =>
-      val v = UTF8String.fromString(part.filePath)
-      _ => v
-    case "_block_offset" => _ => blockOffset
-    case "_record_index" => _ => recordIndex
+  private val columns: Array[Int] = schema.fieldNames.map {
+    case "type" => Type
+    case "id" => Id
+    case "lat" => Lat
+    case "lon" => Lon
+    case "nodes" => Nodes
+    case "members" => Members
+    case "tags" => Tags
+    case "info" => Info
+    case "_file" => File
+    case "_block_offset" => BlockOffset
+    case "_record_index" => RecordIndex
     case other =>
       throw new IllegalArgumentException(s"unknown osmpbf column '$other'")
   }
 
-  private def mapData(tags: Map[String, String]): ArrayBasedMapData = {
-    val keys = new Array[Any](tags.size)
-    val vals = new Array[Any](tags.size)
+  private val row = new UnsafeRowWriter(columns.length, 256)
+  private val tagKeys = new UnsafeArrayWriter(row, 8)
+  private val tagVals = new UnsafeArrayWriter(row, 8)
+  // ordered (pos, nodeId) structs, 1-based pos — Pig loader parity
+  // (OSMPbfPigLoader.java:58-67)
+  private val wayNodes = new UnsafeArrayWriter(row, 8)
+  private val wayNode = new UnsafeRowWriter(wayNodes, 2)
+  private val members = new UnsafeArrayWriter(row, 8)
+  private val member = new UnsafeRowWriter(members, 3)
+  private val info = new UnsafeRowWriter(row, 6)
+  private val file = filePath.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  def write(c: EntityCursor): UnsafeRow = {
+    row.reset()
+    row.zeroOutNullBytes()
     var i = 0
-    tags.foreach { case (k, v) =>
-      keys(i) = UTF8String.fromString(k)
-      vals(i) = UTF8String.fromString(v)
+    while (i < columns.length) {
+      (columns(i): @switch) match {
+        case Type => kindName(row, i, c.kind)
+        case Id => row.write(i, c.id)
+        case Lat => if (c.kind == EntityCursor.Node) row.write(i, c.lat) else row.setNullAt(i)
+        case Lon => if (c.kind == EntityCursor.Node) row.write(i, c.lon) else row.setNullAt(i)
+        case Nodes => if (c.kind == EntityCursor.Way) writeWayNodes(i, c) else row.setNullAt(i)
+        case Members =>
+          if (c.kind == EntityCursor.Relation) writeMembers(i, c) else row.setNullAt(i)
+        case Tags => writeTags(i, c)
+        case Info => if (c.hasInfo) writeInfo(i, c) else row.setNullAt(i)
+        case File => bytes(row, i, file, 0, file.length)
+        case BlockOffset => row.write(i, c.blockStart)
+        case RecordIndex => row.write(i, c.recordIndex)
+      }
       i += 1
     }
-    new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(vals))
+    row.getRow
   }
+
+  private def string(w: UnsafeWriter, ordinal: Int, c: EntityCursor, sid: Int): Unit =
+    if (sid < 0) bytes(w, ordinal, Empty, 0, 0)
+    else bytes(w, ordinal, c.strings.buf, c.strings.offset(sid), c.strings.length(sid))
+
+  /** "node", "way", "relation" by [[EntityCursor]] kind; -1 = "". */
+  private def kindName(w: UnsafeWriter, ordinal: Int, kind: Int): Unit = {
+    val name = if (kind < 0) Empty else KindNames(kind)
+    bytes(w, ordinal, name, 0, name.length)
+  }
+
+  /** `w.write(ordinal, src, off, len)` with `System.arraycopy` in place of
+    * `Platform.copyMemory`, whose fixed cost dominates the short strings
+    * of OSM tags.
+    */
+  private def bytes(w: UnsafeWriter, ordinal: Int, src: Array[Byte], off: Int, len: Int): Unit = {
+    val rounded = (len + 7) & ~7
+    w.grow(rounded)
+    val at = w.cursor()
+    if (rounded > len) Platform.putLong(w.getBuffer, at + rounded - 8, 0L)
+    System.arraycopy(src, off, w.getBuffer, at - Platform.BYTE_ARRAY_OFFSET, len)
+    w.increaseCursor(len)
+    w.setOffsetAndSizeFromPreviousCursor(ordinal, at)
+    w.increaseCursor(rounded - len)
+  }
+
+  /** UnsafeMapData: the key array's byte size, the key array, the value
+    * array.
+    */
+  private def writeTags(ordinal: Int, c: EntityCursor): Unit = {
+    val n = c.tagKeys.size
+    val start = row.cursor()
+    row.grow(8)
+    row.increaseCursor(8)
+    tagKeys.initialize(n)
+    var j = 0
+    while (j < n) { string(tagKeys, j, c, c.tagKeys(j)); j += 1 }
+    Platform.putLong(row.getBuffer, start, row.cursor() - start - 8)
+    tagVals.initialize(n)
+    j = 0
+    while (j < n) { string(tagVals, j, c, c.tagVals(j)); j += 1 }
+    row.setOffsetAndSizeFromPreviousCursor(ordinal, start)
+  }
+
+  private def writeWayNodes(ordinal: Int, c: EntityCursor): Unit = {
+    val n = c.refs.size
+    val start = row.cursor()
+    wayNodes.initialize(n)
+    var j = 0
+    while (j < n) {
+      val at = wayNodes.cursor()
+      wayNode.resetRowWriter()
+      wayNode.write(0, j + 1)
+      wayNode.write(1, c.refs(j))
+      wayNodes.setOffsetAndSizeFromPreviousCursor(j, at)
+      j += 1
+    }
+    row.setOffsetAndSizeFromPreviousCursor(ordinal, start)
+  }
+
+  private def writeMembers(ordinal: Int, c: EntityCursor): Unit = {
+    val n = c.memberIds.size
+    val start = row.cursor()
+    members.initialize(n)
+    var j = 0
+    while (j < n) {
+      val at = members.cursor()
+      member.resetRowWriter()
+      string(member, 0, c, c.memberRoles(j))
+      member.write(1, c.memberIds(j))
+      kindName(member, 2, c.memberTypes(j))
+      members.setOffsetAndSizeFromPreviousCursor(j, at)
+      j += 1
+    }
+    row.setOffsetAndSizeFromPreviousCursor(ordinal, start)
+  }
+
+  private def writeInfo(ordinal: Int, c: EntityCursor): Unit = {
+    val start = row.cursor()
+    info.resetRowWriter()
+    info.write(0, c.version)
+    info.write(1, c.timestampMs * 1000L)
+    info.write(2, c.changeset)
+    info.write(3, c.uid)
+    string(info, 4, c, c.userSid)
+    info.write(5, c.visible)
+    row.setOffsetAndSizeFromPreviousCursor(ordinal, start)
+  }
+}
+
+object OsmRowWriter {
+  private final val Type = 0
+  private final val Id = 1
+  private final val Lat = 2
+  private final val Lon = 3
+  private final val Nodes = 4
+  private final val Members = 5
+  private final val Tags = 6
+  private final val Info = 7
+  private final val File = 8
+  private final val BlockOffset = 9
+  private final val RecordIndex = 10
+
+  private val KindNames: Array[Array[Byte]] =
+    Array("node", "way", "relation").map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  private val Empty = Array.emptyByteArray
 }

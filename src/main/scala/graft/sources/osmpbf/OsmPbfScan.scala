@@ -224,6 +224,45 @@ object OsmPbfScan {
       "max(id)", org.apache.spark.sql.types.LongType, nullable = true)
   })
 
+  /** Byte ranges of `files` ((path, length) pairs), sized by Spark's own
+    * bytes-per-core rule for file sources:
+    *
+    * `splitBytes = min(maxPartitionBytes, max(openCostInBytes,
+    *   Σ(length + openCostInBytes) / minPartitionNum))`
+    *
+    * from `spark.sql.files.maxPartitionBytes` (default 128 MB),
+    * `spark.sql.files.openCostInBytes` (default 4 MB) and
+    * `spark.sql.files.minPartitionNum` (default: the session's default
+    * parallelism), so a file smaller than 128 MB is still read on every
+    * task slot. Each file is cut into `ceil(length / splitBytes)` ranges
+    * of equal length (within one byte), not full ranges plus a
+    * remainder: the slowest range sets the scan's time. Block
+    * realignment inside each range keeps any boundary correct. Files
+    * never share a range, and (unless `maxPartitionBytes` is set below
+    * it) a file no larger than `openCostInBytes` stays one range.
+    * Setting `minPartitionNum` to 1 with a `maxPartitionBytes` above the
+    * file's length reads it as one range.
+    */
+  def splitFiles(spark: SparkSession, files: Seq[(String, Long)]): Seq[OsmPbfInputPartition] = {
+    val conf = spark.sessionState.conf
+    val openCost = conf.filesOpenCostInBytes
+    val minPartitions = conf.filesMinPartitionNum.getOrElse(
+      spark.conf.getOption("spark.sql.leafNodeDefaultParallelism").map(_.toInt)
+        .getOrElse(spark.sparkContext.defaultParallelism))
+    val totalBytes = files.map(_._2 + openCost).sum
+    val splitBytes = math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, totalBytes / math.max(1, minPartitions)))
+    files.flatMap { case (path, len) =>
+      val n = math.max(1L, (len + splitBytes - 1) / splitBytes)
+      val base = len / n
+      val extra = len % n // the first `extra` ranges are one byte longer
+      (0L until n).map { i =>
+        val start = i * base + math.min(i, extra)
+        OsmPbfInputPartition(path, start, start + base + (if (i < extra) 1 else 0))
+      }
+    }
+  }
+
   /** Corrupt-block policy, same contract as Spark's json/csv sources:
     * PERMISSIVE skips undecodable blocks (with a stderr note), FAILFAST
     * (default) fails the task.
@@ -254,7 +293,7 @@ class OsmPbfScan(
 
   override def toMicroBatchStream(
       checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new OsmPbfMicroBatchStream(requiredSchema, parseType, kinds, options,
+    new OsmPbfMicroBatchStream(requiredSchema, kinds, options,
       checkpointLocation)
 
   override def description(): String = {
@@ -267,15 +306,12 @@ class OsmPbfScan(
   }
 
   /** Driver-side split planning: byte ranges per file, sized by
-    * `spark.sql.files.maxPartitionBytes` — the Spark-native equivalent of
-    * FileInputFormat.getSplits (SURVEY §3 stage 2). Block realignment
-    * inside each range keeps arbitrary boundaries correct, so ranges can
-    * be cut anywhere.
+    * [[OsmPbfScan.splitFiles]] — the Spark-native equivalent of
+    * FileInputFormat.getSplits (SURVEY §3 stage 2).
     */
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
     val hadoopConf = spark.sessionState.newHadoopConf()
-    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
     val paths = resolvePaths(options, hadoopConf)
     // one ~KB header read per file on the driver, serving two jobs:
     //  - fail at planning time (not per-task) on files whose OSMHeader
@@ -336,14 +372,7 @@ class OsmPbfScan(
         } finally pool.shutdown()
       }
     val parts = ArrayBuffer.empty[InputPartition]
-    for ((path, len) <- pruned) {
-      var off = 0L
-      while (off < len) {
-        val end = math.min(off + maxBytes, len)
-        parts += OsmPbfInputPartition(path, off, end)
-        off = end
-      }
-    }
+    parts ++= OsmPbfScan.splitFiles(spark, pruned)
     // pushed partial COUNT(*): Spark's final aggregate is a Sum over the
     // partition counts, and a sum over ZERO rows is NULL — an empty
     // directory must still produce one zero-count row to keep count()=0
@@ -402,7 +431,7 @@ class OsmPbfScan(
     if (aggOnly)
       new OsmPbfAggReaderFactory(pushedAggs, kinds, conf, permissive, skips)
     else
-      new OsmPbfPartitionReaderFactory(requiredSchema, parseType, kinds, conf,
+      new OsmPbfPartitionReaderFactory(requiredSchema, kinds, conf,
         permissive, skips, limit)
   }
 }

@@ -90,4 +90,14 @@ class FanOutSpec extends AnyFunSuite {
     assert(jobsAfter == jobsBefore,
       "deciding the fan-out must not execute upstream stages")
   }
+
+  test("SPARK_GRAFT_FANOUT: only on/off force; an unknown value keeps site defaults") {
+    assert(FanOut.parseForce(None).isEmpty)
+    assert(FanOut.parseForce(Some("on")).contains(true))
+    assert(FanOut.parseForce(Some(" OFF ")).contains(false))
+    // before: any value but `on` forced every site OFF, including the
+    // sites whose default is ON
+    assert(FanOut.parseForce(Some("1")).isEmpty)
+    assert(FanOut.parseForce(Some("yes")).isEmpty)
+  }
 }

@@ -49,6 +49,8 @@ class OsmPbfGbScaleSmokeSpec extends AnyFunSuite {
     val (path, genMs) = timedMs(graft.pbf.SyntheticPbf.ensureFile(bytes))
     def read() = spark.read.format("osmpbf").load(path)
     val prev = spark.conf.get(key)
+    val minKey = "spark.sql.files.minPartitionNum"
+    val prevMin = spark.conf.getOption(minKey)
     try {
       spark.conf.set(key, (8L << 20).toString)
       val parts = read().rdd.getNumPartitions
@@ -73,13 +75,16 @@ class OsmPbfGbScaleSmokeSpec extends AnyFunSuite {
       val (decodedCoarseRow, decodedCoarseMs) = timedMs(
         read().agg(count(lit(1)), sum(col("id"))).collect().head)
 
-      // serial reference: single-split pushed count
+      // serial reference: single-split pushed count (minPartitionNum=1,
+      // or the bytes-per-core rule cuts one range per slot)
       spark.conf.set(key, (4L << 30).toString)
-      val (nSingle, singleMs) = timedMs {
-        val df = read()
-        assert(df.rdd.getNumPartitions == 1)
-        df.count()
-      }
+      spark.conf.set(minKey, "1")
+      val (nSingle, singleMs) =
+        try timedMs {
+          val df = read()
+          assert(df.rdd.getNumPartitions == 1)
+          df.count()
+        } finally prevMin.fold(spark.conf.unset(minKey))(spark.conf.set(minKey, _))
 
       // The 1.2x parallel-speedup band is a wall-clock race: when the
       // full suite runs, sibling suites own most of the 32 cores and the

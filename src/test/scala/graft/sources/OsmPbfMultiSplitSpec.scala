@@ -30,6 +30,17 @@ class OsmPbfMultiSplitSpec extends AnyFunSuite {
     finally spark.conf.set(key, prev)
   }
 
+  /** One split the Spark way: without `minPartitionNum=1` the
+    * bytes-per-core rule still cuts the file into one range per slot.
+    */
+  private def withOneSplit[T](body: => T): T = {
+    val minKey = "spark.sql.files.minPartitionNum"
+    val prev = spark.conf.getOption(minKey)
+    spark.conf.set(minKey, "1")
+    try withMaxBytes(1L << 30)(body)
+    finally prev.fold(spark.conf.unset(minKey))(spark.conf.set(minKey, _))
+  }
+
   private def read(opts: (String, String)*) = {
     val r = spark.read.format("osmpbf")
     opts.foreach { case (k, v) => r.option(k, v) }
@@ -37,7 +48,7 @@ class OsmPbfMultiSplitSpec extends AnyFunSuite {
   }
 
   test("many small splits reproduce the single-split scan exactly") {
-    val (idsSingle, nodesSingle, waysSingle) = withMaxBytes(1L << 30) {
+    val (idsSingle, nodesSingle, waysSingle) = withOneSplit {
       val df = read()
       assert(df.rdd.getNumPartitions == 1)
       (df.select("id").as[Long](spark.implicits.newLongEncoder).collect().sorted.toSeq,

@@ -175,7 +175,7 @@ class OsmPbfStreamSpec extends AnyFunSuite {
     val opts = new CaseInsensitiveStringMap(java.util.Map.of(
       "path", dir.toString, "streamOffsetMode", "watermark"))
     val schema = spark.read.format("osmpbf").load(dir.toString).schema
-    def newStream() = new OsmPbfMicroBatchStream(schema, "node",
+    def newStream() = new OsmPbfMicroBatchStream(schema,
       Set(EntityKind.Node), opts, ckpt.toString)
     val stream = newStream()
     val start = stream.initialOffset()
