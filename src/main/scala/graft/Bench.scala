@@ -108,6 +108,13 @@ object Bench {
     else math.max(0.0,
       ((after._1 - before._1) - (after._2 - before._2)) / 100.0 / wallSec)
 
+  /** One entry's timed window: seconds, outcome, shuffle/spill bytes,
+    * non-self CPU cores and the memos it consumed without building.
+    */
+  private final case class Timed(name: String, sec: Double, ok: Boolean,
+      shuffleW: Long, shuffleR: Long, spilled: Long, ext: Double,
+      memoHits: Seq[String])
+
   def main(args: Array[String]): Unit = {
     // EXTERNAL-contention sample: taken before the Spark session (and
     // the 240-query warmup pass) exists, so it reads the BOX, not this
@@ -240,7 +247,7 @@ object Bench {
       // outlier on a mid-suite query. Nudge the cleaner OUTSIDE the timed
       // window so each query starts from a clean session.
       System.gc()
-      (name, sec, ok, shuffleW.get, shuffleR.get, spilled.get, ext,
+      Timed(name, sec, ok, shuffleW.get, shuffleR.get, spilled.get, ext,
         memoHits)
     }
     val loadAfter = load1()
@@ -251,16 +258,16 @@ object Bench {
     // 1s+ queries. The duration-weighted AVERAGE over all queries
     // complements it: a spike that happened to land only on short
     // queries still moves the run-wide ratio.
-    val extValid = results.filter(_._7 >= 0)
-    val extMax = extValid.filter(_._2 >= 1.0)
-      .map(_._7).foldLeft(-1.0)(math.max)
+    val extValid = results.filter(_.ext >= 0)
+    val extMax = extValid.filter(_.sec >= 1.0)
+      .map(_.ext).foldLeft(-1.0)(math.max)
     val extAvg =
       if (extValid.isEmpty) -1.0
-      else extValid.map(r => r._7 * r._2).sum /
-        math.max(extValid.map(_._2).sum, 1e-9)
+      else extValid.map(r => r.ext * r.sec).sum /
+        math.max(extValid.map(_.sec).sum, 1e-9)
     // Full-precision, full-name detail for local inspection (the stdout
     // line is size-capped; see renderLine).
-    val detail = results.map { case (k, v, ok, sw, sr, sp, ext, memo) =>
+    val detail = results.map { case Timed(k, v, ok, sw, sr, sp, ext, memo) =>
       val memoPart =
         if (memo.isEmpty) ""
         else memo.map("\"" + _ + "\"")
@@ -315,14 +322,14 @@ object Bench {
     // the stream: together with build.sbt's StdoutOutput (no "[info] "
     // prefix) the driver's last-2000-chars tail now ends with a BARE,
     // complete JSON line followed only by sbt's [success] line.
-    println(Bench.renderLine(results.map(r => (r._1, r._2, r._3)), sfDir,
+    println(Bench.renderLine(results.map(r => (r.name, r.sec, r.ok)), sfDir,
       Some((loadBefore, loadAfter)), extMax,
       // per-query ext only for >= 1s windows: sub-second windows span a
       // handful of jiffies and a single GC tick reads as a phantom core
       // (the extMax filter's rationale, applied per entry)
-      results.filter(r => r._2 >= 1.0 && r._7 >= 0)
-        .map(r => (r._1, r._7)),
-      results.filter(_._8.nonEmpty).map(_._1)))
+      results.filter(r => r.sec >= 1.0 && r.ext >= 0)
+        .map(r => (r.name, r.ext)),
+      results.filter(_.memoHits.nonEmpty).map(_.name)))
   }
 
   /** The driver captures only the LAST ~2000 characters of output and

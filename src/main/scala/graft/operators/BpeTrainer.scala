@@ -84,53 +84,57 @@ object BpeTrainer {
     val spark = df.sparkSession
     import spark.implicits._
 
-    // corpus -> word dictionary; symbols start as single characters
-    var dict = df
-      .select(explode(split(col(textCol), " ")).as("w"))
-      .filter(length($"w") > 0)
-      .groupBy($"w").agg(count(lit(1)).as("freq"))
-      .select(split($"w", "").as("syms"), $"freq")
-      .localCheckpoint(true)
-
-    // standing pair-count frame (incremental mode only)
-    var pairCounts: DataFrame =
-      if (incremental) countPairs(dict).localCheckpoint(true) else null
-
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
-    var rank = 0
-    var done = false
-    while (rank < numMerges && !done) {
-      val best = (if (incremental) pairCounts else countPairs(dict))
-        .orderBy($"n".desc, $"l", $"r").limit(1).collect()
-      best.headOption.map(r => (r.getString(0), r.getString(1), r.getLong(2))) match {
-        case Some((l, rr, n)) if n >= minPairCount =>
-          val merged = l + rr
-          merges += ((rank, l, rr, merged, n))
-          if (incremental) {
-            // only words containing the adjacent pair change ANY pair
-            // count: split the dictionary on that predicate, re-count
-            // just the affected slice before/after the merge, and fold
-            // the difference into the standing counts
-            val hasPair = exists(zipPairs($"syms"),
-              p => p.getField("l") === lit(l) && p.getField("r") === lit(rr))
-            val affected = dict.filter(hasPair)
-            val applied = affected
-              .select(applyOne($"syms", l, rr).as("syms"), $"freq")
-            val nextDict = dict.filter(!hasPair).unionAll(applied)
-              .localCheckpoint(true)
-            val delta = countPairs(applied)
-              .unionAll(countPairs(affected).select($"l", $"r", (-$"n").as("n")))
-            pairCounts = pairCounts.unionAll(delta)
-              .groupBy($"l", $"r").agg(sum($"n").as("n"))
-              .filter($"n" > 0)
-              .localCheckpoint(true)
-            dict = nextDict
-          } else {
-            dict = dict.select(applyOne($"syms", l, rr).as("syms"), $"freq")
-              .localCheckpoint(true)
+    // each frame's chain frees the step it supersedes; both chains free
+    // their last step on exit (the merge table is already collected)
+    graft.CheckpointChain(spark) { dicts =>
+      graft.CheckpointChain(spark) { counts =>
+        // corpus -> word dictionary; symbols start as single characters
+        var dict = dicts.step(df
+          .select(explode(split(col(textCol), " ")).as("w"))
+          .filter(length($"w") > 0)
+          .groupBy($"w").agg(count(lit(1)).as("freq"))
+          .select(split($"w", "").as("syms"), $"freq"))
+
+        // standing pair-count frame (incremental mode only)
+        var pairCounts: DataFrame =
+          if (incremental) counts.step(countPairs(dict)) else null
+
+        var rank = 0
+        var done = false
+        while (rank < numMerges && !done) {
+          val best = (if (incremental) pairCounts else countPairs(dict))
+            .orderBy($"n".desc, $"l", $"r").limit(1).collect()
+          best.headOption.map(r => (r.getString(0), r.getString(1), r.getLong(2))) match {
+            case Some((l, rr, n)) if n >= minPairCount =>
+              val merged = l + rr
+              merges += ((rank, l, rr, merged, n))
+              if (incremental) {
+                // only words containing the adjacent pair change ANY pair
+                // count: split the dictionary on that predicate, re-count
+                // just the affected slice before/after the merge, and fold
+                // the difference into the standing counts
+                val hasPair = exists(zipPairs($"syms"),
+                  p => p.getField("l") === lit(l) && p.getField("r") === lit(rr))
+                val affected = dict.filter(hasPair)
+                val applied = affected
+                  .select(applyOne($"syms", l, rr).as("syms"), $"freq")
+                val delta = countPairs(applied)
+                  .unionAll(countPairs(affected).select($"l", $"r", (-$"n").as("n")))
+                // the new counts read the current dictionary: step them
+                // first, then the dictionary (which frees the current one)
+                pairCounts = counts.step(pairCounts.unionAll(delta)
+                  .groupBy($"l", $"r").agg(sum($"n").as("n"))
+                  .filter($"n" > 0))
+                dict = dicts.step(dict.filter(!hasPair).unionAll(applied))
+              } else {
+                dict = dicts.step(
+                  dict.select(applyOne($"syms", l, rr).as("syms"), $"freq"))
+              }
+              rank += 1
+            case _ => done = true // no pair left above the floor
           }
-          rank += 1
-        case _ => done = true // no pair left above the floor
+        }
       }
     }
     merges.result().toDF("rank", "left", "right", "merged", "n")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -404,9 +404,6 @@ object Dedup {
       array_min(transform(shHashes, x =>
         pmod(element_at(aLit, i + 1) * x + element_at(bLit, i + 1), lit(MinhashP)))))
   }
-
-  def minhashSignature(text: Column, numHashes: Int = 64): Column =
-    minhashSignatureFromHashes(shingleHashes(text), numHashes)
 
   /** (id, sig) via explode + `numHashes` min-aggregates. This shape hashes
     * each shingle string exactly once: the nested-transform form looks
@@ -897,12 +894,12 @@ object Dedup {
     * materialization via `observe()` instead of a separate driver
     * probe job (3 actions/round → 1 measured a ~2.5x wall-clock cut at
     * local[32], where per-job scheduling overhead dominates small
-    * rounds). A superseded round's checkpoint blocks are dropped
-    * eagerly at the raw-RDD level the moment the next round is
-    * materialized (live checkpoint storage stays O(1) in rounds; only
-    * the final round's blocks outlive the loop, reclaimed by the
-    * ContextCleaner once the result goes unreferenced); `edges` is the
-    * only persist, scoped to this call. Local checkpoints trade
+    * rounds). The rounds are a [[graft.CheckpointChain]]: a superseded
+    * round is freed the moment the next one is materialized, so live
+    * checkpoint storage stays O(1) in rounds. The final round is the
+    * result and outlives the call; [[connectedComponentsScoped]] frees
+    * it on exit. `edges` is the only persist, scoped to this call.
+    * Local checkpoints trade
     * executor-loss recovery for speed — on a long-running shared
     * cluster, snapshot `pairs` to a table first if the pair computation
     * is expensive to redo.
@@ -911,7 +908,23 @@ object Dedup {
       pairs: DataFrame,
       aCol: String = "id_a",
       bCol: String = "id_b",
-      maxIter: Int = 25): DataFrame = {
+      maxIter: Int = 25): DataFrame =
+    components(new graft.CheckpointChain(pairs.sparkSession),
+      pairs, aCol, bCol, maxIter)
+
+  /** [[connectedComponents]] over (id_a, id_b) pairs, handed to `use`;
+    * the final round is freed on exit, so materialize inside `use`.
+    */
+  def connectedComponentsScoped[T](pairs: DataFrame)(use: DataFrame => T): T =
+    graft.CheckpointChain(pairs.sparkSession)(chain =>
+      use(components(chain, pairs, "id_a", "id_b", 25)))
+
+  private def components(
+      chain: graft.CheckpointChain,
+      pairs: DataFrame,
+      aCol: String,
+      bCol: String,
+      maxIter: Int): DataFrame = {
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
@@ -921,7 +934,7 @@ object Dedup {
       // over edges): dense dup clusters — the common case — converge to
       // their final label immediately and the loop only runs its one
       // confirmation round; chains still need the doubling rounds
-      var (labels, checksum, liveIds) = checkpointWithChecksum(
+      var (labels, checksum) = checkpointWithChecksum(chain,
         edges.groupBy(col("src").as("id"))
           .agg(least(col("src"), min(col("dst"))).as("lbl")))
       var converged = false
@@ -940,17 +953,13 @@ object Dedup {
         val parent = labels.select(col("id").as("pid"), col("lbl").as("plbl"))
         val jump = labels.join(parent, labels("lbl") === parent("pid"))
           .select(labels("id"), col("plbl").as("lbl"))
-        val (next, sum, nextIds) = checkpointWithChecksum(
+        // the chain frees the superseded round once `next` is
+        // materialized, at the raw-RDD level — bypassing the Dataset
+        // cache manager, whose cascading invalidation is the trap the
+        // doc comment describes
+        val (next, sum) = checkpointWithChecksum(chain,
           prop.union(jump).union(labels.select(col("id"), col("lbl")))
             .groupBy(col("id")).agg(min(col("lbl")).as("lbl")))
-        // `next` is fully materialized (eager checkpoint), so the
-        // superseded round's blocks can be dropped NOW at the raw-RDD
-        // level — bypassing the Dataset cache manager (whose cascading
-        // invalidation is the trap the doc comment describes) — which
-        // bounds live checkpoint storage to O(1) rounds instead of
-        // leaving O(rounds) blocks for the GC-driven ContextCleaner.
-        releasePersisted(labels.sparkSession, liveIds)
-        liveIds = nextIds
         // labels only ever decrease, so sum(lbl) is monotone until the
         // fixpoint: equal checksum across a round means no label moved.
         // null = empty label set (no pairs): nothing can change, stop.
@@ -965,26 +974,19 @@ object Dedup {
     }
   }
 
-  /** Eagerly local-checkpoints `labels` and returns the frame together
-    * with sum(lbl) observed DURING that same materialization — zero
-    * extra jobs — and the ids of the persistent RDDs that checkpoint
-    * registered (so the caller can release them when the round is
-    * superseded; only the FINAL round's blocks outlive the loop, and
-    * those the ContextCleaner reclaims once the result frame goes
-    * unreferenced). Decimal(38) sum cannot overflow for any realistic
-    * node count. Falls back to a direct aggregate in the
-    * (never-observed) case where the checkpoint action did not surface
-    * the metric.
+  /** Eagerly checkpoints `labels` as the chain's next step and returns
+    * the frame together with sum(lbl) observed DURING that same
+    * materialization — zero extra jobs. Decimal(38) sum cannot overflow
+    * for any realistic node count. Falls back to a direct aggregate in
+    * the (never-observed) case where the checkpoint action did not
+    * surface the metric.
     */
   private def checkpointWithChecksum(
-      labels: DataFrame): (DataFrame, java.math.BigDecimal, Set[Int]) = {
-    val sc = labels.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
+      chain: graft.CheckpointChain,
+      labels: DataFrame): (DataFrame, java.math.BigDecimal) = {
     val obs = org.apache.spark.sql.Observation()
-    val ckpt = labels
-      .observe(obs, sum(col("lbl").cast("decimal(38,0)")).as("checksum"))
-      .localCheckpoint(true)
-    val added = sc.getPersistentRDDs.keySet.diff(before)
+    val ckpt = chain.step(labels
+      .observe(obs, sum(col("lbl").cast("decimal(38,0)")).as("checksum")))
     // the checkpoint action has completed, but the listener that fills
     // the observation runs on the listener bus — await it briefly, and
     // fall back to a direct aggregate if it somehow never arrives
@@ -997,20 +999,7 @@ object Dedup {
         case _: java.util.concurrent.TimeoutException =>
           ckpt.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0)
       }
-    (ckpt, sum0, added.toSet)
-  }
-
-  /** Drops the given persistent RDDs' blocks non-blockingly, at the
-    * raw-RDD level (localCheckpoint storage never enters the Dataset
-    * cache manager, so this cannot trigger its cascading re-plan).
-    * ONLY safe for checkpoints nothing will read again: unpersisting a
-    * local checkpoint discards both the data and the (truncated)
-    * lineage. Shared by the iterative operators (CC, PageRank).
-    */
-  private[graft] def releasePersisted(
-      spark: SparkSession, ids: Set[Int]): Unit = {
-    val live = spark.sparkContext.getPersistentRDDs
-    ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
+    (ckpt, sum0)
   }
 
   /** Edit-distance (Levenshtein) near-dup pairs — the character-level

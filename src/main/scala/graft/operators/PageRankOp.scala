@@ -54,75 +54,42 @@ object PageRankOp {
       s"pageRank: n*scale*17 exceeds Long range (n=$n, scale=$scale); " +
         "lower `scale` (ranks stay proportional) so n*scale <= 2^63/17")
     val base = (scale * 3 / 20) / n // both engines: (scale*3/20) // n
-    val sc = edges.sparkSession.sparkContext
     var ranks = nodes.select(col("node"), lit(scale).as("rank"))
-    // superseded round checkpoints are released eagerly (the
-    // connectedComponents discipline): once round i is materialized,
-    // nothing ever reads round i-1 again, so live checkpoint storage
-    // stays O(1) in iterations instead of waiting on the ContextCleaner
-    var liveIds = Set.empty[Int]
+    // each round's checkpoint frees the round it supersedes: once round
+    // i is materialized nothing reads round i-1 again. The final round
+    // is the result and outlives the call.
+    val chain = new graft.CheckpointChain(edges.sparkSession)
     for (_ <- 1 to iters) {
       val contrib = withDeg
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"),
           expr("(rank * 17) DIV (20 * deg)").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("c"))
-      val before = sc.getPersistentRDDs.keySet
-      ranks = nodes
+      ranks = chain.step(nodes
         .join(contrib, Seq("node"), "left")
         .select(col("node"),
-          (lit(base) + coalesce(col("c"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
-      val added = sc.getPersistentRDDs.keySet.diff(before).toSet
-      Dedup.releasePersisted(edges.sparkSession, liveIds)
-      liveIds = added
+          (lit(base) + coalesce(col("c"), lit(0L))).as("rank")))
     }
     ranks
   }
 
   /** Cross-entry memo of the distinct (custkey, suppkey) commerce pair
     * frame — the lineitem x orders distinct that BOTH graph entries
-    * (p49 pagerank, p159 HITS) previously re-derived independently
-    * (r15: the lshPairsMemo discipline — at scale the pair graph is
-    * computed once and feeds every graph consumer). MemoLedger-
-    * instrumented so bench entries riding it self-label; ids-only (two
-    * keys), pair-count-sized; localCheckpoint(true) so per-entry plans
-    * start from the materialized frame; key replacement on
-    * (appId, dir) change.
+    * (p49 pagerank, p159 HITS) would otherwise re-derive independently
+    * (at scale the pair graph is computed once and feeds every graph
+    * consumer). Ids-only (two keys), pair-count-sized; keyed by sfDir.
     */
-  @volatile private var commercePairsMemo
-      : Option[((String, String), DataFrame, Set[Int])] = None
+  private val commercePairsMemo =
+    new graft.FrameMemo[String]("commercePairs")
 
   def commercePairs(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = (s.sparkContext.applicationId, dir)
-      commercePairsMemo match {
-        case Some((k, df, _)) if k == key =>
-          graft.MemoLedger.recordHit("commercePairs"); df
-        case prev =>
-          graft.MemoLedger.recordBuild("commercePairs")
-          // ADVICE r15: a key change (new dir / new session) must
-          // RELEASE the superseded checkpoint's MEMORY_AND_DISK blocks
-          // eagerly — dropping the reference alone leaves them to the
-          // GC-driven ContextCleaner, so multi-dir runs accumulated
-          // stale blocks. Raw-RDD release (the connectedComponents
-          // discipline); ids were captured at build time below.
-          prev.foreach { case ((app, _), _, ids) =>
-            if (app == s.sparkContext.applicationId)
-              Dedup.releasePersisted(s, ids)
-          }
-          val li = graft.Tables.t(s, dir, "lineitem")
-          val ord = graft.Tables.t(s, dir, "orders")
-          val before = s.sparkContext.getPersistentRDDs.keySet
-          val df = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-            .select(col("o_custkey").as("c"), col("l_suppkey").as("sp"))
-            .distinct()
-            .localCheckpoint(true)
-          val added = s.sparkContext.getPersistentRDDs.keySet.diff(before)
-          commercePairsMemo = Some((key, df, added.toSet))
-          df
-      }
+    commercePairsMemo(s, dir) {
+      val li = graft.Tables.t(s, dir, "lineitem")
+      val ord = graft.Tables.t(s, dir, "orders")
+      li.join(ord, li("l_orderkey") === ord("o_orderkey"))
+        .select(col("o_custkey").as("c"), col("l_suppkey").as("sp"))
+        .distinct()
     }
 
   /** The customer–supplier commerce graph: distinct (cust, supp) pairs

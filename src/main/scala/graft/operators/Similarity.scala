@@ -909,51 +909,43 @@ object Similarity {
       k: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
     val q = emb.filter(col(idCol) === queryId)
       .select(col(vecCol).as("__q"))
-    // rel6 null only for zero-norm vectors; drop them (oracle mirrors)
-    val before0 = sc.getPersistentRDDs.keySet
-    var cand = emb.filter(col(idCol) =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col(idCol).as("__id"), col(vecCol).as("__vec"),
-        sim6(col(vecCol), col("__q")).as("__rel6"))
-      .filter(col("__rel6").isNotNull)
-      .withColumn("__maxsim6", lit(Long.MinValue))
-      .localCheckpoint(true)
-    // track ONLY this operator's checkpoints — never shared memos
-    var liveIds = sc.getPersistentRDDs.keySet.diff(before0).toSet
     val picks = Seq.newBuilder[(Int, Long, Long, Long)]
-    var exhausted = false
-    for (r <- 1 to k if !exhausted) {
-      // round 1 has an empty selected set: mmr = relevance alone
-      val mmr6 = if (r == 1) col("__rel6")
-                 else col("__rel6") - col("__maxsim6")
-      // the pick's vector rides along with the argmax row — ONE job per
-      // round instead of a second lookup job for the rescore probe
-      val top = cand.orderBy(mmr6.desc, col("__id")).limit(1)
-        .select(col("__id"), col("__rel6"), mmr6.as("__mmr6"), col("__vec"))
-        .collect()
-      if (top.isEmpty) exhausted = true // corpus smaller than k: stop
-      else {
-        val row = top.head
-        val pickId = row.getLong(0)
-        picks += ((r, pickId, row.getLong(1), row.getLong(2)))
-        if (r < k) {
-          val pickVec = row.getSeq[Float](3).toArray
-          val before = sc.getPersistentRDDs.keySet
-          cand = cand.filter(col("__id") =!= pickId)
-            .withColumn("__maxsim6",
-              greatest(col("__maxsim6"),
-                sim6(col("__vec"), typedLit(pickVec))))
-            .localCheckpoint(true)
-          val added = sc.getPersistentRDDs.keySet.diff(before).toSet
-          Dedup.releasePersisted(spark, liveIds) // superseded round only
-          liveIds = added
+    // the chain owns ONLY this operator's checkpoints — never shared memos
+    graft.CheckpointChain(spark) { chain =>
+      // rel6 null only for zero-norm vectors; drop them (oracle mirrors)
+      var cand = chain.step(emb.filter(col(idCol) =!= queryId)
+        .crossJoin(broadcast(q))
+        .select(col(idCol).as("__id"), col(vecCol).as("__vec"),
+          sim6(col(vecCol), col("__q")).as("__rel6"))
+        .filter(col("__rel6").isNotNull)
+        .withColumn("__maxsim6", lit(Long.MinValue)))
+      var exhausted = false
+      for (r <- 1 to k if !exhausted) {
+        // round 1 has an empty selected set: mmr = relevance alone
+        val mmr6 = if (r == 1) col("__rel6")
+                   else col("__rel6") - col("__maxsim6")
+        // the pick's vector rides along with the argmax row — ONE job per
+        // round instead of a second lookup job for the rescore probe
+        val top = cand.orderBy(mmr6.desc, col("__id")).limit(1)
+          .select(col("__id"), col("__rel6"), mmr6.as("__mmr6"), col("__vec"))
+          .collect()
+        if (top.isEmpty) exhausted = true // corpus smaller than k: stop
+        else {
+          val row = top.head
+          val pickId = row.getLong(0)
+          picks += ((r, pickId, row.getLong(1), row.getLong(2)))
+          if (r < k) {
+            val pickVec = row.getSeq[Float](3).toArray
+            cand = chain.step(cand.filter(col("__id") =!= pickId)
+              .withColumn("__maxsim6",
+                greatest(col("__maxsim6"),
+                  sim6(col("__vec"), typedLit(pickVec)))))
+          }
         }
       }
     }
-    Dedup.releasePersisted(spark, liveIds)
     picks.result().toDF("sel_rank", idCol, "rel6", "mmr6")
   }
 

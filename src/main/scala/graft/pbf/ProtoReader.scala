@@ -25,8 +25,6 @@ import scala.collection.mutable.ArrayBuilder
   */
 final class ProtoReader(val buf: Array[Byte], var pos: Int, val end: Int) {
 
-  def hasRemaining: Boolean = pos < end
-
   /** Declared length of a length-delimited field, bounds-checked. */
   private def readLen(): Int = {
     val len = readVarint().toInt
@@ -61,25 +59,6 @@ final class ProtoReader(val buf: Array[Byte], var pos: Int, val end: Int) {
   /** Field key: (fieldNumber << 3) | wireType. Returns -1 at end. */
   def readTag(): Int =
     if (pos >= end) -1 else readVarint().toInt
-
-  def readFixed32(): Int = {
-    if (pos + 4 > end)
-      throw new IllegalArgumentException(s"fixed32 truncated at $pos")
-    val v = (buf(pos) & 0xff) | ((buf(pos + 1) & 0xff) << 8) |
-      ((buf(pos + 2) & 0xff) << 16) | ((buf(pos + 3) & 0xff) << 24)
-    pos += 4
-    v
-  }
-
-  def readFixed64(): Long = {
-    if (pos + 8 > end)
-      throw new IllegalArgumentException(s"fixed64 truncated at $pos")
-    var v = 0L
-    var i = 7
-    while (i >= 0) { v = (v << 8) | (buf(pos + i) & 0xffL); i -= 1 }
-    pos += 8
-    v
-  }
 
   /** Length-delimited payload as a sub-reader (zero-copy). */
   def readMessage(): ProtoReader = {

@@ -746,43 +746,33 @@ object Pipeline10 {
         }
         val picked = scala.collection.mutable.ArrayBuffer(
           (1L, 0L, java.math.BigDecimal.ZERO))
-        val sc = s.sparkContext
-        val before0 = sc.getPersistentRDDs.keySet
-        var mind = distTo(0L)
-          .select($"vec_id", $"d2".as("mind"))
-          .localCheckpoint(true)
-        var liveIds = sc.getPersistentRDDs.keySet.diff(before0).toSet
-        // The loop stops early when the candidate set exhausts (fewer
-        // than 8 vectors in the corpus — a tiny SF or filtered
-        // fixture): an empty argmax means every vector is already a
-        // center, and indexing collect()(0) would throw at
-        // plan-construction time.
-        var exhausted = false
-        for (t <- 2 to 8 if !exhausted) {
-          val tops = mind
-            .orderBy($"mind".desc, $"vec_id").limit(1)
-            .collect()
-          if (tops.isEmpty) exhausted = true
-          else {
-            val top = tops(0)
-            val cid = top.getLong(0)
-            picked += ((t.toLong, cid, top.getDecimal(1)))
-            if (t < 8) {
-              val before = sc.getPersistentRDDs.keySet
-              mind = mind.filter($"vec_id" =!= cid)
-                .join(distTo(cid), "vec_id")
-                .select($"vec_id",
-                  least($"mind", $"d2").as("mind"))
-                .localCheckpoint(true)
-              val added = sc.getPersistentRDDs.keySet.diff(before).toSet
-              // raw-RDD release: Dataset.unpersist() is a no-op on a
-              // checkpointed LogicalRDD (the CacheManager never saw it)
-              graft.operators.Dedup.releasePersisted(s, liveIds)
-              liveIds = added
+        graft.CheckpointChain(s) { chain =>
+          var mind = chain.step(distTo(0L)
+            .select($"vec_id", $"d2".as("mind")))
+          // The loop stops early when the candidate set exhausts (fewer
+          // than 8 vectors in the corpus — a tiny SF or filtered
+          // fixture): an empty argmax means every vector is already a
+          // center, and indexing collect()(0) would throw at
+          // plan-construction time.
+          var exhausted = false
+          for (t <- 2 to 8 if !exhausted) {
+            val tops = mind
+              .orderBy($"mind".desc, $"vec_id").limit(1)
+              .collect()
+            if (tops.isEmpty) exhausted = true
+            else {
+              val top = tops(0)
+              val cid = top.getLong(0)
+              picked += ((t.toLong, cid, top.getDecimal(1)))
+              if (t < 8) {
+                mind = chain.step(mind.filter($"vec_id" =!= cid)
+                  .join(distTo(cid), "vec_id")
+                  .select($"vec_id",
+                    least($"mind", $"d2").as("mind")))
+              }
             }
           }
         }
-        graft.operators.Dedup.releasePersisted(s, liveIds)
         cells.unpersist()
         // radius as floor(d² · 10^6) — an EXACT integer of the exact
         // decimal, because the round-6 double form hit a half-way tie

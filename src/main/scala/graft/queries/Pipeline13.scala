@@ -51,19 +51,15 @@ import org.apache.spark.sql.functions._
 object Pipeline13 {
   import graft.Tables.t
 
-  /** Cross-entry memo for the banded pair graph (the
-    * kmeansAsgMemo/fittedKmeansAssigned discipline): p171 and p172
+  /** Cross-entry memo for the banded pair graph: p171 and p172
     * read the IDENTICAL deterministic pair set, and at production
     * scale the pair graph is computed once and feeds every consumer
     * (cluster inventory, contamination audit, keep-lists) — so one
-    * executor-resident localCheckpoint replaces two back-to-back
-    * LSH candidate joins in an isolated-timing harness. The frame is
-    * ids+sim only (pair-count-sized, never corpus-sized). Key
-    * replacement on (appId, sfDir) change.
+    * memoized frame replaces two back-to-back LSH candidate joins in
+    * an isolated-timing harness. The frame is ids+sim only
+    * (pair-count-sized, never corpus-sized). Keyed by sfDir.
     */
-  @volatile private var lshPairsMemo
-      : Option[((String, String), org.apache.spark.sql.DataFrame, Set[Int])] =
-    None
+  private val lshPairsMemo = new graft.FrameMemo[String]("lshPairs")
 
   /** The 0.4-threshold knobs, READ FROM the derivation (r13 ask #1)
     * rather than hard-coded: derivedLshKnobs(0.4) = (4, 48) — the
@@ -76,30 +72,10 @@ object Pipeline13 {
 
   private def bandedPairs(
       s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = synchronized {
-    val key = (s.sparkContext.applicationId, dir)
-    lshPairsMemo match {
-      case Some((k, df, _)) if k == key =>
-        graft.MemoLedger.recordHit("lshPairs"); df
-      case prev =>
-        graft.MemoLedger.recordBuild("lshPairs")
-        // ADVICE r15 (the commercePairs fix applied here too): release
-        // the superseded key's checkpoint blocks eagerly on replacement
-        // instead of waiting on the GC-driven ContextCleaner.
-        prev.foreach { case ((app, _), _, ids) =>
-          if (app == s.sparkContext.applicationId)
-            graft.operators.Dedup.releasePersisted(s, ids)
-        }
-        val before = s.sparkContext.getPersistentRDDs.keySet
-        val df = graft.operators.Similarity.nearDupPairsLsh(
-            t(s, dir, "embeddings"), "vec_id", "embedding", minSim = 0.4,
-            planes = legacyKnobs._1, tables = legacyKnobs._2)
-          .localCheckpoint(true)
-        val added = s.sparkContext.getPersistentRDDs.keySet.diff(before)
-        lshPairsMemo = Some((key, df, added.toSet))
-        df
-    }
-  }
+      dir: String): org.apache.spark.sql.DataFrame =
+    lshPairsMemo(s, dir)(graft.operators.Similarity.nearDupPairsLsh(
+      t(s, dir, "embeddings"), "vec_id", "embedding", minSim = 0.4,
+      planes = legacyKnobs._1, tables = legacyKnobs._2))
 
   /** p173's production operating point: minSim 0.7 (a real near-dup
     * threshold) at a 256-table budget → (12, 232). Derived ONCE here —

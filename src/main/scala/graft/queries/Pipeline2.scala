@@ -56,66 +56,39 @@ object Pipeline2 {
     * Verify time every entry in isolation, so p24 and p28 would re-run
     * the identical upstream Jaccard pair generation (~4 s at sf0.1)
     * back to back; a production pipeline computes that stage ONCE and
-    * fans out. This single-entry memo emulates exactly that sharing:
-    * keyed by (applicationId, sfDir) so a new session or a different
-    * scale factor recomputes; holds only the id->cluster label frame
-    * (bounded by the near-dup subset, hundreds of rows at sf0.1) as an
-    * executor-resident localCheckpoint — the CORPUS is never cached.
-    * Replacing the entry drops the only strong reference and the
-    * ContextCleaner reclaims the old checkpoint blocks on the
-    * harness's per-query GC, so at most one stage result is ever
-    * alive (CacheHygieneSpec pins the bound).
+    * fans out. This memo emulates exactly that sharing, keyed by sfDir;
+    * it holds only the id->cluster label frame (bounded by the near-dup
+    * subset, hundreds of rows at sf0.1) — the CORPUS is never cached.
+    * The pair stage comes from the [[Pipeline.jaccardPairs]] memo, so
+    * only the CC rounds run here.
     */
-  @volatile private var clustersMemo
-      : Option[((String, String), org.apache.spark.sql.DataFrame)] = None
+  private val clustersMemo = new graft.FrameMemo[String]("dupClusters")
 
-  private def dupClusters(
+  private[queries] def dupClusters(
       s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = synchronized {
-    val key = (s.sparkContext.applicationId, dir)
-    clustersMemo match {
-      case Some((k, df)) if k == key =>
-        graft.MemoLedger.recordHit("dupClusters"); df
-      case _ =>
-        graft.MemoLedger.recordBuild("dupClusters")
-        // the pair stage comes from Pipeline.jaccardPairs — already a
-        // memoized checkpoint, so only the CC rounds run here
-        val labels = Dedup.connectedComponents(Pipeline.jaccardPairs(s, dir))
-          .localCheckpoint(true)
-        clustersMemo = Some((key, labels))
-        labels
-    }
-  }
+      dir: String): org.apache.spark.sql.DataFrame =
+    clustersMemo.scoped(s, dir)(checkpoint =>
+      Dedup.connectedComponentsScoped(Pipeline.jaccardPairs(s, dir))(checkpoint))
 
   /** Cross-entry memo for the learned BPE merge table: p42 (training)
     * and p102 (corpus encode) share one 12-merge fit. The table is
     * PLAIN DATA (12 rows of strings + counts collected in rank order
     * from the driver-loop trainer), so whichever entry runs first pays
-    * the fit — the fittedKmeans discipline. Keyed by
-    * (applicationId, sfDir).
+    * the fit — the fittedKmeans discipline. Keyed by sfDir.
     */
-  @volatile private var bpeMemo
-      : Option[((String, String), Seq[(Int, String, String, String, Long)])] =
-    None
+  private val bpeMemo =
+    new graft.Memo[String, Seq[(Int, String, String, String, Long)]]("bpe")
 
   private[queries] def learnedBpe(
       s: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[(Int, String, String, String, Long)] = synchronized {
-    val key = (s.sparkContext.applicationId, dir)
-    bpeMemo match {
-      case Some((k, m)) if k == key =>
-        graft.MemoLedger.recordHit("bpe"); m
-      case _ =>
-        graft.MemoLedger.recordBuild("bpe")
-        val rows = graft.operators.BpeTrainer
-          .learnMerges(t(s, dir, "documents"), "text", numMerges = 12)
-          .orderBy(col("rank")).collect()
-          .map(r => (r.getInt(0), r.getString(1), r.getString(2),
-            r.getString(3), r.getLong(4))).toSeq
-        bpeMemo = Some((key, rows))
-        rows
+      dir: String): Seq[(Int, String, String, String, Long)] =
+    bpeMemo(s, dir) {
+      graft.operators.BpeTrainer
+        .learnMerges(t(s, dir, "documents"), "text", numMerges = 12)
+        .orderBy(col("rank")).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2),
+          r.getString(3), r.getLong(4))).toSeq
     }
-  }
 
   def defs: Seq[QueryDef] = Seq(
 

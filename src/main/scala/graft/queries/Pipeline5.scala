@@ -888,30 +888,18 @@ object Pipeline5 {
   /** p98's full BM25 pipeline ending in the top-20 (doc_id, score,
     * n_terms) — shared with p100's hybrid fusion (Pipeline6), which
     * needs the lexical ranking as one of its two fused systems. The
-    * 20-row result is memoized the annExactTop10 way (keyed by
-    * (applicationId, sfDir), executor-resident localCheckpoint):
-    * whichever of p98/p100 runs first pays the corpus scan; an
-    * isolated-timing harness would otherwise run the identical
-    * explode+aggregate twice back to back where a production retrieval
-    * stack computes its lexical index once.
+    * 20-row result is memoized, keyed by sfDir: whichever of p98/p100
+    * runs first pays the corpus scan; an isolated-timing harness would
+    * otherwise run the identical explode+aggregate twice back to back
+    * where a production retrieval stack computes its lexical index
+    * once.
     */
-  @volatile private var bm25Memo
-      : Option[((String, String), org.apache.spark.sql.DataFrame)] = None
+  private val bm25Memo = new graft.FrameMemo[String]("bm25")
 
   private[queries] def bm25Top20(
       s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = synchronized {
-    val key = (s.sparkContext.applicationId, dir)
-    bm25Memo match {
-      case Some((k, df)) if k == key =>
-        graft.MemoLedger.recordHit("bm25"); df
-      case _ =>
-        graft.MemoLedger.recordBuild("bm25")
-        val top = bm25Top20Plan(s, dir).localCheckpoint(true)
-        bm25Memo = Some((key, top))
-        top
-    }
-  }
+      dir: String): org.apache.spark.sql.DataFrame =
+    bm25Memo(s, dir)(bm25Top20Plan(s, dir))
 
   /** The un-memoized BM25 plan — what the memo materializes. Exposed
     * package-wide so PlanAuditSpec can pin the REAL plan (the memoized

@@ -979,50 +979,27 @@ object Pipeline6 {
     * Lloyd-refined twice — driver-side plain data): p106's blocked
     * recall gate and p109's full-side mining share one build.
     */
-  @volatile private var bitextIvfMemo
-      : Option[((String, String), Similarity.IvfIndex)] = None
+  private val ivfMemo = new graft.Memo[String, Similarity.IvfIndex]("bitextIvf")
 
   private def bitextIvf(s: SparkSession, dir: String): Similarity.IvfIndex =
-    synchronized {
-      val key = (s.sparkContext.applicationId, dir)
-      bitextIvfMemo match {
-        case Some((k, idx)) if k == key =>
-          graft.MemoLedger.recordHit("bitextIvf"); idx
-        case _ =>
-          graft.MemoLedger.recordBuild("bitextIvf")
-          val (_, bSide, _) = bitextSides(s, dir)
-          val idx = Similarity.ivfBuild(bSide, "vec_id", "embedding",
-            nCells = 16, kmeansIters = 2)
-          bitextIvfMemo = Some((key, idx))
-          idx
-      }
+    ivfMemo(s, dir) {
+      val (_, bSide, _) = bitextSides(s, dir)
+      Similarity.ivfBuild(bSide, "vec_id", "embedding",
+        nCells = 16, kmeansIters = 2)
     }
 
   /** Cross-entry memo for the exact x-side kNN (probe -> top-4 side-B
     * mates, <= 64 rows): p101's margin scoring and p106's IVF recall
-    * gate both read it — whichever runs first pays the corpus scan
-    * (the annExactTop10 discipline; executor-resident localCheckpoint
-    * keyed by (applicationId, sfDir)).
+    * gate both read it — whichever runs first pays the corpus scan.
     */
-  @volatile private var xknnMemo
-      : Option[((String, String), DataFrame)] = None
+  private val xknnMemo = new graft.FrameMemo[String]("bitextXknn")
 
   private def bitextXknn(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = (s.sparkContext.applicationId, dir)
-      xknnMemo match {
-        case Some((k, df)) if k == key =>
-          graft.MemoLedger.recordHit("bitextXknn"); df
-        case _ =>
-          graft.MemoLedger.recordBuild("bitextXknn")
-          import s.implicits._
-          val (_, bSide, probes) = bitextSides(s, dir)
-          val xk = knn4(s, probes,
-            bSide.select($"vec_id".as("cid"), $"embedding".as("cvec")))
-            .localCheckpoint(true)
-          xknnMemo = Some((key, xk))
-          xk
-      }
+    xknnMemo(s, dir) {
+      import s.implicits._
+      val (_, bSide, probes) = bitextSides(s, dir)
+      knn4(s, probes,
+        bSide.select($"vec_id".as("cid"), $"embedding".as("cvec")))
     }
 
   /** The x-side oracle CTE chain (probes, exact decimal cosines,
